@@ -1,5 +1,42 @@
 package graft
 
+import graft.operators.Storage
+import graft.queries.QueryDef
+import org.apache.spark.scheduler._
+import scala.collection.mutable
+
+/** The one timing harness: registered queries timed `N` reps in a
+  * seeded per-rep order, each observation released and cleaned up
+  * before the next, bracketed by a converged calibration anchor.
+  *
+  * Usage (env):
+  *  - `SPARK_GRAFT_SF_DIR` data dir (default the sf0.1 test corpus);
+  *  - `SPARK_GRAFT_BENCH_N` reps (default 3);
+  *  - `SPARK_GRAFT_BENCH_QUERIES` comma-separated full names (default
+  *    the whole registry, or [[SweepSet]] when a scaled dir is set);
+  *  - `SPARK_GRAFT_BENCH_DETAIL` full-fidelity JSON record (default
+  *    BENCH_DETAIL.json);
+  *  - `SPARK_GRAFT_SCALE_DIR` a `SPARK_GRAFT_SCALE_FACTOR`× (default
+  *    10) slice of the data dir ([[graft.tools.ScaleUp]],
+  *    [[graft.tools.ZipfSlice]]). Each query then runs on the base
+  *    and the scaled dir back to back inside every rep, so box drift
+  *    cancels out of the ratio, and its detail record gains the
+  *    empirical scaling exponent `log(t_scaled / t_base) / log(factor)`.
+  *    ≈ 1 is linear; window/sort-bound plans may run slightly above 1
+  *    (n log n); well above ~1.3 is a super-linear plan the PlanAudit
+  *    shape checks could not catch. Sub-second base times carry fixed
+  *    scheduler/JIT overhead that deflates the exponent — exponents
+  *    are evidence against super-linearity, not complexity fits.
+  *
+  * Args observe the last rep: `profile` prints each query's per-stage
+  * wall/tasks/input/shuffle bytes and per-job walls to stderr (the
+  * "where do the seconds go" loop); `plans <outDir> <tag>` writes each
+  * query's formatted plan, every eager checkpoint included, to
+  * `<outDir>/<name>_<tag>.txt` (`_<tag>_scaled` for the scaled dir).
+  *
+  * A failed observation is recorded, never timed into a total; a
+  * query with no successful observation is listed as failed.
+  */
 object Bench {
   /** The stdout contract keys each query on its short id (the prefix
     * before the first underscore) to stay under the harness's
@@ -11,53 +48,181 @@ object Bench {
     if (id.matches("[a-z]+\\d+")) id else name
   }
 
-  /** Driver-contract core count (restored in round 16 — an early
-    * optimization commit hard-coded `local[32]`, which silently
-    * pinned the driver's lower-core-count scaling runs to 32 cores
-    * and made the per-core scaling measurement meaningless). The
-    * master AND the shuffle-partition count both derive from
-    * `SPARK_GRAFT_CPUS` so the execution layout scales with the
-    * granted cores rather than being tuned for one box (guide §2:
-    * scale-adaptive partitioning; AQE coalescing still merges small
-    * post-shuffle partitions on top). Default 32 = this sandbox's
-    * core count, keeping round-over-round bench artifacts
-    * comparable. */
-  private[graft] def cpusFromEnv(get: String => Option[String]): Int = {
-    val raw = get("SPARK_GRAFT_CPUS").map(_.trim).filter(_.nonEmpty)
-    raw.flatMap(v => scala.util.Try(v.toInt).toOption).filter(_ > 0)
-      .getOrElse(32)
+  /** The consolidated family-covering sweep set (VERDICT r11 #4): the
+    * heaviest registry lines per operator family at the round-12
+    * closing state, so ONE regenerated BENCH_SCALE.json carries every
+    * family's current exponent. cass_* lines are excluded — they
+    * benchmark self-generated fixed-size sstable fixtures an input-dir
+    * scale factor cannot reach; st* streaming gates are excluded —
+    * their cost is micro-batch restart choreography (see the bench's
+    * total_stream_gate_s split), not input-scaled data work. */
+  val SweepSet: Seq[String] = Seq(
+    // dedup (exact / jaccard / minhash / simhash / edit / exact-substr)
+    "d02_ngram_jaccard_pairs", "d08_containment_pairs", "d09_weighted_jaccard",
+    "d10_edit_rerank", "d14_ensemble_pairs", "d19_cluster_sources",
+    "d25_minhash_k_sweep", "d29_exact_substr", "d30_exact_substr_by_source",
+    "d31_exact_substr_pairs", "d32_exact_substr_scrub",
+    "d33_df_saturation", "d37_rare_window_kanon", "d38_source_overlap_sketch",
+    "d39_source_containment", "p47_scrub_savings_by_source",
+    "p52_decontamination_scrub", "p53_gated_packing",
+    "d34_band_skew", "d36_minhash_band_skew", "d35_dialogue_dedup",
+    "p55_dialogue_scrub", "p56_dialogue_contamination",
+    "p54_curation_compose", "p58_sft_packing",
+    "d40_dialogue_minhash", "p62_sft_curation_compose", "p63_sft_waterfill",
+    // retrieval
+    "t19_bm25_topk", "t21_bm25_artifact", "t23_hybrid_rrf", "t27_snippets",
+    "s19_hard_negatives",
+    // tokenizer / packing
+    "t13_bpe_train", "t14_bpe_vocab", "t16_bpe_artifact", "p13_pack_subwords",
+    // graph
+    "c01_dedup_clusters", "c02_pagerank", "c04_kcore",
+    "c06_component_histogram", "c10_cc_incremental", "c17_dup_cascade_depth",
+    "c18_source_authority",
+    // similarity / ANN
+    "s13_ivf_trained_topk", "s16_semantic_dedup_bigk", "s17_ivfpq_topk",
+    "s18_mmr_rerank", "s32_knn_confusion", "s36_ivf_list_gini",
+    "s37_int8_rank_fidelity", "s40_kcenter_coreset", "p60_coreset_sample",
+    // rank statistics / profiling
+    "q41_profile", "q76_gini", "q82_spearman", "q88_robust_outliers",
+    "q92_quartile_dispersion", "q93_key_skew_audit", "q94_join_advisor",
+    // events / baskets
+    "e41_gap_dispersion", "e42_handoff_latency", "e43_user_activity_powerlaw",
+    "q42_assoc_rules",
+    "q63_assoc_top_support",
+    // text analysis / curation
+    "t31_tfidf_pairs", "t38_tokenizer_fertility", "t39_source_drift_tv",
+    "p12_curation_pipeline", "p14_dsir_selection", "p22_data_selection",
+    "p27_effective_tokens", "p46_span_contamination", "p48_dedup_corrected_mix",
+    "p49_quality_dedup_keep_best", "t48_repetition_gates", "t49_chunk_inventory",
+    "p50_ccnet_buckets", "s39_semantic_contamination", "p51_soft_dedup_weights",
+    "p57_waterfill_budget", "t50_zipf_fit", "t51_heaps_curve",
+    "p59_privacy_gate", "t52_source_zipf_slopes", "p61_waterfill_select",
+    "t53_mattr_diversity",
+    // multimodal (documents-derived media)
+    "m12_phash_neardup", "m19_rare_phash_audit")
+
+  /** One timed run of one query on one dir; `rows` is None when the
+    * run threw. */
+  final case class Obs(secs: Double, rows: Option[Long], contended: Boolean)
+
+  /** One query's result on one dir, over its successful observations. */
+  final case class Summary(min: Double, med: Double, rows: Long,
+      contended: Boolean, failedObs: Int)
+
+  /** None when every observation failed. min over ALL successful
+    * observations (contention only inflates times, so a contended min
+    * is still valid); med over CLEAN successful observations when at
+    * least one exists — a contended sample alongside the clean re-run
+    * would otherwise skew median-based jitter reporting upward (r14
+    * ADVICE). contended = NO clean successful observation exists. */
+  def summarize(obs: Seq[Obs]): Option[Summary] = {
+    val ok = obs.filter(_.rows.isDefined)
+    if (ok.isEmpty) None
+    else {
+      val clean = ok.filterNot(_.contended)
+      val medBasis = if (clean.nonEmpty) clean else ok
+      Some(Summary(ok.map(_.secs).min,
+        medBasis.map(_.secs).sorted.apply(medBasis.length / 2),
+        ok.head.rows.get, clean.isEmpty, obs.size - ok.size))
+    }
+  }
+
+  /** Per-stage / per-job wall-time attribution while `on`. */
+  private final class StageProfile extends SparkListener {
+    @volatile var on = false
+    private case class St(ms: Long, tasks: Int, in: Long, sr: Long, sw: Long, name: String)
+    private val stages = mutable.LinkedHashMap.empty[Int, St]
+    private val jobs = mutable.LinkedHashMap.empty[Int, (Long, Long, String)]
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      if (on) synchronized {
+        val i = e.stageInfo
+        stages(i.stageId) = St(
+          i.completionTime.getOrElse(0L) - i.submissionTime.getOrElse(0L),
+          i.numTasks, i.taskMetrics.inputMetrics.bytesRead,
+          i.taskMetrics.shuffleReadMetrics.totalBytesRead,
+          i.taskMetrics.shuffleWriteMetrics.bytesWritten,
+          i.name.linesIterator.next().take(120))
+      }
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      if (on) synchronized {
+        jobs(e.jobId) = (e.time, 0L, Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse("").take(80))
+      }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit =
+      if (on) synchronized {
+        jobs.get(e.jobId).foreach { case (s, _, d) => jobs(e.jobId) = (s, e.time, d) }
+      }
+    def report(header: String): Unit = synchronized {
+      val err = System.err
+      err.println(s"== $header")
+      err.println("== jobs (wall ms):")
+      jobs.foreach { case (id, (s, e, d)) => err.println(f"  job $id%3d ${e - s}%6d ms  $d") }
+      err.println(f"  sum of job walls: ${jobs.values.map { case (s, e, _) => e - s }.sum}%d ms (overlap possible)")
+      err.println("== stages by duration:")
+      stages.toSeq.sortBy(-_._2.ms).take(25).foreach { case (id, s) =>
+        err.println(f"  stage $id%4d ${s.ms}%6d ms tasks=${s.tasks}%3d " +
+          f"in=${s.in / 1024}%8d KiB sr=${s.sr / 1024}%8d KiB " +
+          f"sw=${s.sw / 1024}%8d KiB  ${s.name}")
+      }
+      stages.clear(); jobs.clear()
+    }
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = cpusFromEnv(sys.env.get)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
+    val scaledDir = sys.env.get("SPARK_GRAFT_SCALE_DIR")
+    val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
+    val dirs = sfDir +: scaledDir.toSeq
+    // n>=3 iterations, report per-query MIN (the steady-state number a
+    // warmed executor fleet would see; local[32] single runs carry
+    // 1.3-1.4x JIT/GC noise that made round-over-round drift
+    // unattributable — VERDICT r2 #5)
+    val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_N", "3").toInt
+    val (profile, planOut) = args.toSeq match {
+      case Seq() => (false, None)
+      case Seq("profile") => (true, None)
+      case Seq("plans", outDir, tag) => (false, Some((outDir, tag)))
+      case _ => sys.error("usage: graft.Bench [profile | plans <outDir> <tag>]")
+    }
+    val byName = SparkEntry.registry.map(q => q.name -> q).toMap
+    val reg = sys.env.get("SPARK_GRAFT_BENCH_QUERIES")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+      .orElse(scaledDir.map(_ => SweepSet))
+      .map(_.map(n => byName.getOrElse(n,
+        throw new IllegalArgumentException(s"unknown query $n"))))
+      .getOrElse(SparkEntry.registry)
+      .sortBy(_.name)
+
+    val spark = GraftSession("graft-bench", conf = Map(
       // AQE coalescing floor (round 16): parallelismFirst=true (the
       // default) coalesces post-shuffle partitions down to
       // minPartitionSize=1m, which put CPU-heavy mid-size stages
       // (e.g. d02's capped-collect pair fan-out reading a 4.3 MB
       // exchange) on 4 of 32 cores. 256k keeps such stages wide; at
       // production shuffle sizes the advisory target dominates and
-      // this floor is irrelevant. Parameterised for non-local runs.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "256k"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      // this floor is irrelevant.
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "256k"))
+    val stageProfile = if (profile) {
+      val l = new StageProfile; spark.sparkContext.addSparkListener(l); Some(l)
+    } else None
+    planOut.foreach { case (outDir, _) =>
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
+    }
 
     // untimed warmup: JIT/codegen/scheduler/FS init would otherwise be
     // billed to whichever query runs first — including first-use
     // compilation of the regex tokenizer, higher-order-function
     // codegen, and the native hash expressions (warmed on 50-row
-    // samples; no sf-scale data is touched untimed)
+    // samples; no sf-scale data is touched untimed). Best effort per
+    // table: scaled slices may hold only documents + embeddings.
+    def warm(table: String)(body: => Unit): Unit =
+      try body catch {
+        case e: Exception => System.err.println(s"[bench] warmup skipped $table: $e")
+      }
     spark.range(1000000).selectExpr("sum(id)").collect()
-    Tables.lineitem(spark, sfDir).limit(10).collect()
-    locally {
+    warm("lineitem") { Tables.lineitem(spark, sfDir).limit(10).collect() }
+    warm("documents") {
       import graft.operators.TextOps
       Tables.documents(spark, sfDir).limit(50)
         .selectExpr(s"${TextOps.tokens("text")} AS t")
@@ -67,18 +232,14 @@ object Bench {
           s"${TextOps.minhashSig(s"${TextOps.hashAll("t")}", 16)} AS sig",
           s"${TextOps.simhash60(s"transform(t, x -> ${TextOps.strHash60("x")})")} AS sh")
         .selectExpr(s"${TextOps.foldHash("hs")}", "sig", "sh").collect()
+    }
+    warm("embeddings") {
       Tables.embeddings(spark, sfDir).limit(50)
         .selectExpr("transform(embedding, x -> cast(x as double)) AS v")
         .selectExpr(s"${graft.operators.Similarity.lshBucketExpr("v", 18)} AS b",
           "aggregate(zip_with(v, v, (x, y) -> x * y), cast(0 as double), (acc, p) -> acc + p) AS d")
         .collect()
     }
-
-    // n>=3 iterations, report per-query MIN (the steady-state number a
-    // warmed executor fleet would see; local[32] single runs carry
-    // 1.3-1.4x JIT/GC noise that made round-over-round drift
-    // unattributable — VERDICT r2 #5)
-    val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_N", "3").toInt
 
     // fixed calibration anchor (VERDICT r8 #4): an sf-INDEPENDENT
     // CPU+shuffle-bound workload whose definition never changes across
@@ -113,16 +274,8 @@ object Bench {
     }
     val (calibPre, calibWarmRuns) = calibConverged()
     System.err.println(f"[bench] calib converged after $calibWarmRuns runs: $calibPre%.3fs")
-    // per-rep SEEDED random query order (VERDICT r9 #3): with a fixed
-    // alphabetical order any residual drift inflates one alphabet
-    // range systematically (r9's c01 regression was exactly this).
-    // A different deterministic permutation per rep means no query
-    // sits in the same thermal/GC window every rep, so the per-query
-    // MIN over reps is order-debiased while the run stays replayable.
-    val reg = SparkEntry.registry.sortBy(_.name)
-    val timesByName =
-      scala.collection.mutable.Map.empty[String, Vector[(Double, Long, Boolean)]]
-    val calibMids = scala.collection.mutable.ArrayBuffer.empty[Double]
+    val obsBy = mutable.Map.empty[(String, String), Vector[Obs]]
+    val calibMids = mutable.ArrayBuffer.empty[Double]
     // contention-aware sweep (VERDICT r13 #3): the binding driver sheet
     // has repeatedly manufactured phantom regressions when another
     // process landed on the box mid-sweep (r13: c11/e26/s03/s16 at up
@@ -160,10 +313,19 @@ object Bench {
     def contThreshold(): Double =
       math.max(1.75 * probeMedian(), 2.5 * calibBest)
     val rerunCapPerRep = 4
-    def timeOne(q: graft.queries.QueryDef): (Double, Long) = {
+    def timeOne(q: QueryDef, dir: String, last: Boolean): Obs = {
+      val plans = planOut.filter(_ => last)
+      val sections = mutable.ArrayBuffer.empty[String]
+      stageProfile.foreach(_.on = last)
       val t0 = System.nanoTime()
-      val n = try {
-        val df = q.run(spark, sfDir)
+      val rows = try {
+        // the plans of every eager checkpoint the query materializes
+        // (the frames the timed action actually executes) plus the
+        // final frame's own plan
+        if (plans.isDefined) Storage.planSink.set(p => sections += p)
+        val df = try q.run(spark, dir) finally Storage.planSink.remove()
+        if (plans.isDefined) sections += df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
         // free the iteration's operator-result checkpoint blocks
         // (dedup/similarity operators materialize-and-release their
         // intermediates internally now; the RESULT blocks are the
@@ -175,23 +337,62 @@ object Bench {
         // NOTE: since round 8 every iteration pays the full
         // signature recompute — operators no longer leave a warm
         // cache behind — so per-query min is the true cold-run cost.
-        try df.count()
-        finally graft.operators.Storage.release(df)
-      } catch { case _: Throwable => -1L }
-      ((System.nanoTime() - t0) / 1e9, n)
-    }
-    def record(obs: Seq[(graft.queries.QueryDef, Double, Long)],
-        contended: Boolean): Unit =
-      obs.foreach { case (q, dt, n) =>
-        timesByName(q.name) =
-          timesByName.getOrElse(q.name, Vector()) :+ ((dt, n, contended))
+        try Some(df.count())
+        finally Storage.release(df)
+      } catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] ${q.name} failed on $dir: $e")
+          None
       }
+      val secs = (System.nanoTime() - t0) / 1e9
+      stageProfile.filter(_ => last).foreach { p =>
+        Thread.sleep(500) // let the listener bus drain
+        p.on = false
+        p.report(f"${q.name} on $dir: $secs%.3f s, rows=${rows.getOrElse("FAILED")}")
+      }
+      plans.filter(_ => rows.isDefined).foreach { case (outDir, tag) =>
+        val suffix = if (dir == sfDir) tag else s"${tag}_scaled"
+        val txt = sections.zipWithIndex.map { case (p, i) =>
+          val label =
+            if (i == sections.size - 1) "final frame"
+            else s"eager checkpoint #${i + 1}"
+          s"==== plan section: $label ====\n$p"
+        }.mkString("\n")
+        java.nio.file.Files.write(
+          java.nio.file.Paths.get(outDir, s"${q.name}_$suffix.txt"),
+          txt.getBytes("UTF-8"))
+      }
+      // single-JVM hygiene, OUTSIDE the timed window: broadcast and
+      // checkpoint blocks of the PREVIOUS queries are cleaned by the
+      // ContextCleaner only after GC proves them unreachable — at
+      // 100× a few uncollected broadcasts from 8 preceding heavy
+      // queries starve the next aggregation's page allocator
+      // (AGGREGATE_OUT_OF_MEMORY at a 60g heap with <20g live). A
+      // real cluster recycles executors; the single-JVM stand-in
+      // nudges the collector between queries instead.
+      spark.catalog.clearCache()
+      System.gc()
+      Obs(secs, rows, contended = false)
+    }
+    def record(obs: Seq[(String, String, Obs)], contended: Boolean): Unit =
+      obs.foreach { case (name, dir, o) =>
+        obsBy((name, dir)) = obsBy.getOrElse((name, dir), Vector()) :+
+          o.copy(contended = contended)
+      }
+    // per-rep SEEDED random query order (VERDICT r9 #3): with a fixed
+    // alphabetical order any residual drift inflates one alphabet
+    // range systematically (r9's c01 regression was exactly this).
+    // A different deterministic permutation per rep means no query
+    // sits in the same thermal/GC window every rep, so the per-query
+    // MIN over reps is order-debiased while the run stays replayable.
     for (rep <- 1 to iters) {
+      val last = rep == iters
       val order = new scala.util.Random(0x9E3779B97F4A7C15L + rep).shuffle(reg)
       var prevProbe = probe()
       var reruns = 0
       for (block <- order.grouped(24)) {
-        def runBlock() = block.map { q => val (dt, n) = timeOne(q); (q, dt, n) }
+        def runBlock() =
+          for (q <- block; dir <- dirs) yield (q.name, dir, timeOne(q, dir, last))
         val obs = runBlock()
         val post = probe()
         val thr = contThreshold()
@@ -209,27 +410,17 @@ object Bench {
           prevProbe = post2
         } else prevProbe = post
       }
-      spark.catalog.clearCache()
     }
-    val results = reg.map { q =>
-      val times = timesByName(q.name)
-      // min over ALL observations (contention only inflates times, so
-      // a contended min is still valid); med over CLEAN observations
-      // only when at least one exists — a contended sample alongside
-      // the clean re-run would otherwise skew median-based jitter
-      // reporting upward (r14 ADVICE)
-      val best = times.map(_._1).min
-      val cleanTimes = times.filter(!_._3)
-      val medBasis = if (cleanTimes.nonEmpty) cleanTimes else times
-      val med = medBasis.map(_._1).sorted.apply(medBasis.length / 2)
-      // contended = NO clean observation exists for this query (every
-      // rep + any re-run ran inside a flagged block)
-      val contended = cleanTimes.isEmpty
+    // a query counts only when it succeeded on every dir
+    val summaries = reg.map(q => q.name -> dirs.map(d => summarize(obsBy((q.name, d)))))
+    val failedNames = summaries.collect { case (k, s) if s.exists(_.isEmpty) => k }
+    val results = summaries.collect { case (k, s) if s.forall(_.isDefined) => (k, s.map(_.get)) }
+    results.foreach { case (k, s) =>
       System.err.println(
-        f"[bench] ${q.name}%-28s min=$best%7.2fs med=$med%7.2fs rows=${times.head._2}" +
-          (if (contended) " CONTENDED" else ""))
-      (q.name, best, med, times.head._2, contended)
+        f"[bench] $k%-28s " + s.map(x => f"min=${x.min}%7.2fs med=${x.med}%7.2fs rows=${x.rows}").mkString(" | ") +
+          (if (s.exists(_.contended)) " CONTENDED" else ""))
     }
+    failedNames.foreach(k => System.err.println(f"[bench] $k%-28s FAILED"))
     def r(v: Double, scale: Int): String = {
       val s = BigDecimal(v).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toString
       if (s.contains('.')) s.reverse.dropWhile(_ == '0').stripPrefix(".").reverse else s
@@ -244,13 +435,15 @@ object Bench {
         case c if c < ' ' => f"\\u${c.toInt}%04x"
         case c => c.toString
       }
+    def strs(vs: Seq[String]): String = vs.map("\"" + js(_) + "\"").mkString("[", ",", "]")
     val calibPost = (1 to iters).map(_ => calibOnce()).min
     val calib = math.min(calibPre, calibPost)
     System.err.println(
       f"[bench] calib pre=$calibPre%.3fs post=$calibPost%.3fs min=$calib%.3fs " +
         s"mids=${calibMids.map(v => f"$v%.3f").mkString(",")}")
-    val total = results.map(_._2).sum
-    val contendedNames = results.collect { case (k, _, _, _, true) => k }
+    val base = results.map { case (k, s) => (k, s.head) }
+    val total = base.map(_._2.min).sum
+    val contendedNames = results.collect { case (k, s) if s.exists(_.contended) => k }
     // batch vs streaming-gate subtotals (VERDICT r11 #3): the st*
     // gates each restart a real Structured Streaming query several
     // times (processAllAvailable + checkpoint replay) — fixed
@@ -258,24 +451,42 @@ object Bench {
     // headline total they obscured the flat batch trend round over
     // round. Split so both trends read independently.
     val isStreamGate = (name: String) => name.matches("st\\d+_.*")
-    val totalStream = results.collect { case (k, best, _, _, _) if isStreamGate(k) => best }.sum
+    val totalStream = base.collect { case (k, s) if isStreamGate(k) => s.min }.sum
     val totalBatch = total - totalStream
     // full-fidelity per-query record (full names, min+median, rows,
     // iteration count) goes to a FILE — the stdout tail capture is
     // 2000 chars, which the 75-query full-name map outgrew in round 5
     // (the line head was truncated and the harness parse failed)
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "BENCH_DETAIL.json")
-    val detail = results.map { case (k, best, med, rows, cont) =>
-      s""""$k":{"min":${r(best, 3)},"med":${r(med, 3)},"rows":$rows${
-        if (cont) ""","contended":true""" else ""}}"""
+    val detail = results.map { case (k, s) =>
+      val b = s.head
+      val scaled = s.drop(1).map { x =>
+        val expo = math.log(x.min / b.min) / math.log(factor.toDouble)
+        // output-bound classifier (VERDICT r12 #6): how time PER
+        // EMITTED ROW moved across the decade —
+        // (t_scaled/rows_scaled)/(t_base/rows_base). < 1 means per-row
+        // cost FELL even if total time grew super-linearly (a pair
+        // inventory whose output itself grew, d10/d14's class); null
+        // when either row count is 0 (nothing emitted to normalize by).
+        val tpr =
+          if (b.rows > 0 && x.rows > 0) r((x.min / x.rows) / (b.min / b.rows), 3)
+          else "null"
+        System.err.println(f"[bench] $k%-28s exponent=$expo%5.2f t_per_row_x=$tpr")
+        s""","t_scaled":${r(x.min, 3)},"med_scaled":${r(x.med, 3)},"rows_scaled":${
+          x.rows},"exponent":${r(expo, 3)},"t_per_row_x":$tpr"""
+      }.mkString
+      s""""$k":{"min":${r(b.min, 3)},"med":${r(b.med, 3)},"rows":${b.rows}$scaled${
+        if (s.exists(_.contended)) ""","contended":true""" else ""}${
+        val f = s.map(_.failedObs).sum; if (f > 0) s""","failed_obs":$f""" else ""}}"""
     }.mkString("{", ",", "}")
+    val scaleJson = scaledDir.map(d => s""","scaled":"${js(d)}","factor":$factor""").getOrElse("")
     java.nio.file.Files.write(
       java.nio.file.Paths.get(detailPath),
-      s"""{"metric":"total","value":${r(total, 3)},"unit":"sec","total_batch_s":${r(totalBatch, 3)},"total_stream_gate_s":${r(totalStream, 3)},"n":$iters,"sf":"${js(sfDir)}","contended_queries":[${contendedNames.map("\"" + _ + "\"").mkString(",")}],"calib":{"pre":${r(calibPre, 3)},"post":${r(calibPost, 3)},"best":${r(calibBest, 3)},"warm_runs":$calibWarmRuns,"mids":[${calibMids.map(r(_, 3)).mkString(",")}]},"queries":$detail}\n"""
+      s"""{"metric":"total","value":${r(total, 3)},"unit":"sec","total_batch_s":${r(totalBatch, 3)},"total_stream_gate_s":${r(totalStream, 3)},"n":$iters,"sf":"${js(sfDir)}"$scaleJson,"contended_queries":${strs(contendedNames)},"n_failed":${failedNames.size},"failed_queries":${strs(failedNames)},"calib":{"pre":${r(calibPre, 3)},"post":${r(calibPost, 3)},"best":${r(calibBest, 3)},"warm_runs":$calibWarmRuns,"mids":[${calibMids.map(r(_, 3)).mkString(",")}]},"queries":$detail}\n"""
         .getBytes("UTF-8"))
     // collisions fall back to the full name so the map is always 1:1
     // with the registry (see shortId)
-    val shortIds = results.map { case (k, _, _, _, _) => k -> shortId(k) }
+    val shortIds = reg.map(q => q.name -> shortId(q.name))
     val counts = shortIds.groupBy(_._2).map { case (id, g) => id -> g.size }
     val keyed = shortIds.map { case (k, id) => k -> (if (counts(id) > 1) k else id) }.toMap
     // The harness captures only the LAST 2000 chars of stdout —
@@ -287,36 +498,39 @@ object Bench {
     // detail file referenced by "detail".
     // jitter visibility (VERDICT r10 #8): med alongside min for
     // top-20-by-min lines whose med/min spread exceeds 1.2
-    val medLines = results.sortBy(-_._2).take(20)
-      .filter { case (_, best, med, _, _) => best > 0 && med / best > 1.2 }
-      .map { case (k, _, med, _, _) => "\"" + keyed(k) + "\":" + r(med, 2) }
+    val medLines = base.sortBy(-_._2.min).take(20)
+      .filter { case (_, s) => s.min > 0 && s.med / s.min > 1.2 }
+      .map { case (k, s) => "\"" + keyed(k) + "\":" + r(s.med, 2) }
     val medJson =
       if (medLines.isEmpty) "" else s""","med":${medLines.mkString("{", ",", "}")}"""
-    val byCost = results.sortBy(-_._2)
-      .map { case (k, best, _, _, _) => "\"" + keyed(k) + "\":" + r(best, 2) }
-    def line(n: Int): String = {
-      val qs = byCost.take(n).mkString("{", ",", "}")
+    val byCost = base.sortBy(-_._2.min)
+      .map { case (k, s) => "\"" + keyed(k) + "\":" + r(s.min, 2) }
+    // largest n in [floor, max] whose rendering fits `budget` chars
+    def fit(max: Int, floor: Int, budget: Int)(render: Int => String): Int =
+      if (max <= floor || render(max).length <= budget) max
+      else fit(max - 1, floor, budget)(render)
+    // the failed list is capped so a mass failure cannot crowd out the
+    // per-query map; n_failed always carries the full count
+    def failedJson(n: Int): String =
+      s""","n_failed":${failedNames.size},"failed":${strs(failedNames.take(n).map(keyed))}"""
+    val failed = failedJson(fit(failedNames.size, 0, 400)(failedJson))
+    def line(qs: String): String =
       s"""{"metric":"total","value":${r(total, 3)},"unit":"sec","total_batch_s":${
         r(totalBatch, 3)},"total_stream_gate_s":${r(totalStream, 3)},"calib":${
-        r(calib, 3)},"n_queries":${results.size},"n_contended":${contendedNames.size},"queries":$qs$medJson,"sf":"${
+        r(calib, 3)},"n_queries":${reg.size},"n_contended":${contendedNames.size}$failed$qs,"sf":"${
         js(sfDir)}","detail":"${js(detailPath)}"}"""
-    }
+    def perQuery(n: Int): String =
+      line(s""","queries":${byCost.take(n).mkString("{", ",", "}")}$medJson""")
     // The harness's 2000-char tail window also swallows sbt's
     // trailing "[success] Total time ..." line (~75 chars), so a
     // 1990-char line still truncates at its HEAD and parses as null
     // (BENCH_r13..r15). Budget BOTH lines + the sbt trailer into the
-    // window: a ~1600-char top-queries line first, then a short
-    // totals-only summary line LAST — whichever line the driver's
-    // tail parse lands on is complete.
-    val summary =
-      s"""{"metric":"total","value":${r(total, 3)},"unit":"sec","total_batch_s":${
-        r(totalBatch, 3)},"total_stream_gate_s":${r(totalStream, 3)},"calib":${
-        r(calib, 3)},"n_queries":${results.size},"n_contended":${contendedNames.size},"sf":"${
-        js(sfDir)}","detail":"${js(detailPath)}"}"""
-    var keep = byCost.size
-    while (keep > 1 && line(keep).length > 1990 - summary.length - 85) keep -= 1
+    // window: a short totals-only summary line first, then the
+    // per-query line LAST — tail parsers read the last line.
+    val summary = line("")
+    val keep = fit(byCost.size, 1, 1990 - summary.length - 85)(perQuery)
     spark.stop()
-    println(line(keep))
     println(summary)
+    println(perQuery(keep))
   }
 }

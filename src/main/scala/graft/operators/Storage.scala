@@ -28,8 +28,8 @@ object Storage {
     * FORMATTED physical plan handed to the sink BEFORE
     * materialization — the plan the timed action actually executes,
     * which the post-checkpoint frame no longer shows (it reads as a
-    * `Scan ExistingRDD`). No-op (null) outside
-    * [[graft.tools.PlanDump]]; never set by queries or the bench. */
+    * `Scan ExistingRDD`). No-op (null) outside the plan dump of
+    * [[graft.Bench]] (`plans <outDir> <tag>`); never set by queries. */
   private[graft] val planSink =
     new ThreadLocal[String => Unit]
 

@@ -173,7 +173,7 @@ object Pipeline6 {
         // parallelFloor at THIS call site only: t16's encode feeds a
         // broadcast join + checkpoint and measured 1.97 s floored vs
         // 2.65-2.73 s unfloored, while t15/t38's bare encode paths
-        // measured the floor as overhead (r16 BenchQuick)
+        // measured the floor as overhead (r16 subset bench)
         val enc = Bpe.encodeWith(tok,
           graft.operators.Storage.parallelFloor(docs), "text")
           .selectExpr("doc_id",

@@ -1,10 +1,9 @@
 package graft.sstable
 
 import java.util
-import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.hadoop.io.Text
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -96,6 +95,32 @@ object AegJsonSource {
     }.getOrElse(false)
     if (mapView) MapSchema else Schema
   }
+
+  /** The non-empty, non-hidden files under the `path`/`paths` options
+    * (a directory contributes its direct children), with their fs. */
+  private[sstable] def listFiles(options: Map[String, String], conf: org.apache.hadoop.conf.Configuration)
+      : Seq[(FileSystem, FileStatus)] =
+    SSTableSource.optionPaths(options, "aegjson").flatMap { p =>
+      val root = new Path(p)
+      val fs = root.getFileSystem(conf)
+      SSTableSource.expandGlob(fs, root).flatMap { st =>
+        if (st.isDirectory)
+          fs.listStatus(st.getPath).toSeq.filter(s => s.isFile && !SSTableSource.isHidden(s.getPath))
+        else Seq(st)
+      }.filter(_.getLen > 0).map(fs -> _)
+    }
+
+  /** `blocksize`-byte ranges of one file; readers align each range to
+    * the newline after its start. */
+  private[sstable] def byteRanges(fs: FileSystem, st: FileStatus, options: Map[String, String])
+      : Seq[AegJsonPartition] = {
+    val blocksize = options.getOrElse("blocksize", (64L * 1024 * 1024).toString).toLong
+    (0L until st.getLen by blocksize).map { off =>
+      val end = math.min(off + blocksize, st.getLen)
+      AegJsonPartition(st.getPath.toString, off, end,
+        SSTableSource.hostsFor(fs, st, off, end - off))
+    }
+  }
 }
 
 final class AegJsonTable(props: Map[String, String])
@@ -144,28 +169,8 @@ final class AegJsonScan(options: Map[String, String], required: StructType)
 
   private lazy val plannedPartitions: Array[InputPartition] = {
     val conf = SparkSession.active.sessionState.newHadoopConf()
-    val blocksize = options.getOrElse("blocksize", (64L * 1024 * 1024).toString).toLong
-    val paths = SSTableSource.optionPaths(options, "aegjson")
-    val parts = ArrayBuffer[InputPartition]()
-    paths.foreach { p =>
-      val root = new Path(p)
-      val fs = root.getFileSystem(conf)
-      val files = SSTableSource.expandGlob(fs, root).flatMap { st =>
-        if (st.isDirectory)
-          fs.listStatus(st.getPath).toSeq.filter(s => s.isFile && !SSTableSource.isHidden(s.getPath))
-        else Seq(st)
-      }
-      files.filter(_.getLen > 0).foreach { st =>
-        var off = 0L
-        while (off < st.getLen) {
-          val end = math.min(off + blocksize, st.getLen)
-          parts += AegJsonPartition(st.getPath.toString, off, end,
-            SSTableSource.hostsFor(fs, st, off, end - off))
-          off = end
-        }
-      }
-    }
-    parts.toArray
+    AegJsonSource.listFiles(options, conf)
+      .flatMap { case (fs, st) => AegJsonSource.byteRanges(fs, st, options) }.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -193,16 +198,9 @@ final class AegJsonMicroBatchStream(options: Map[String, String], required: Stru
   private val hconf = new org.apache.spark.util.SerializableConfiguration(
     SparkSession.active.sessionState.newHadoopConf())
 
-  private def listSorted(): Seq[org.apache.hadoop.fs.FileStatus] =
-    SSTableSource.optionPaths(options, "aegjson").flatMap { p =>
-      val root = new Path(p)
-      val fs = root.getFileSystem(hconf.value)
-      SSTableSource.expandGlob(fs, root).flatMap { st =>
-        if (st.isDirectory)
-          fs.listStatus(st.getPath).toSeq.filter(s => s.isFile && !SSTableSource.isHidden(s.getPath))
-        else Seq(st)
-      }.filter(_.getLen > 0)
-    }.sortBy(st => (st.getModificationTime, st.getPath.toString))
+  private def listSorted() =
+    AegJsonSource.listFiles(options, hconf.value)
+      .sortBy { case (_, st) => (st.getModificationTime, st.getPath.toString) }
 
   override def initialOffset(): Offset = FilesOffset(0)
   override def latestOffset(): Offset = FilesOffset(listSorted().size)
@@ -214,17 +212,8 @@ final class AegJsonMicroBatchStream(options: Map[String, String], required: Stru
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[FilesOffset].n
     val e = end.asInstanceOf[FilesOffset].n
-    val blocksize = options.getOrElse("blocksize", (64L * 1024 * 1024).toString).toLong
-    listSorted().slice(s, e).flatMap { st =>
-      var off = 0L
-      val out = ArrayBuffer[InputPartition]()
-      while (off < st.getLen) {
-        val to = math.min(off + blocksize, st.getLen)
-        out += AegJsonPartition(st.getPath.toString, off, to, Array.empty)
-        off = to
-      }
-      out
-    }.toArray
+    listSorted().slice(s, e)
+      .flatMap { case (fs, st) => AegJsonSource.byteRanges(fs, st, options) }.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

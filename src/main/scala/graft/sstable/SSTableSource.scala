@@ -220,70 +220,51 @@ object SSTableSource {
       forcedVersion: Option[String]): Seq[SSTablePartition] = {
     val file = st.getPath
     val version = forcedVersion.getOrElse(SSTableVersion.fromFilename(file.getName).name)
-    val parts = ArrayBuffer[SSTablePartition]()
-    compressionPath(fs, file) match {
-      case Some(ci) =>
+    val ci = compressionPath(fs, file)
+    // the logical (uncompressed) length the Index.db offsets live in,
+    // and block hosts for a logical byte range
+    val (length, hosts): (Long, (Long, Long) => Array[String]) = ci match {
+      case Some(c) =>
         // S4 + the reference's wishlist improvement (README.md:40-41):
         // with an Index.db we can split COMPRESSED sstables too —
         // offsets are in uncompressed space; the reader seeks to the
         // containing chunk and skips in. Otherwise: one partition.
         val meta = {
-          val in = fs.open(ci)
+          val in = fs.open(c)
           try CompressionMeta.read(in, st.getLen)
           finally in.close()
         }
         // locality in COMPRESSED (on-disk) space: map uncompressed
         // offsets to the containing chunk's file offset
-        def cHosts(uStart: Long, uEnd: Long): Array[String] = {
+        (meta.dataLength, (uStart, uEnd) => {
           val nChunks = meta.chunkOffsets.length
           val sIdx = math.min((uStart / meta.chunkLength).toInt, nChunks - 1)
           val eIdx = math.min((uEnd / meta.chunkLength).toInt, nChunks - 1)
           val cStart = meta.chunkOffsets(sIdx)
           val cEnd = if (eIdx >= nChunks - 1) st.getLen else meta.chunkOffsets(eIdx + 1)
           hostsFor(fs, st, cStart, cEnd - cStart)
-        }
-        val idx = new Path(file.getParent, file.getName.replace("-Data.db", "-Index.db"))
-        if (meta.dataLength <= blocksize || !fs.exists(idx)) {
-          parts += SSTablePartition(file.toString, 0L, meta.dataLength, Some(ci.toString),
-            version, cHosts(0L, meta.dataLength))
-        } else {
-          val in = fs.open(idx)
-          val offsets = try IndexScanner.dataOffsets(in).toArray finally in.close()
-          var splitStart = 0L
-          offsets.foreach { off =>
-            if (off - splitStart >= blocksize) {
-              parts += SSTablePartition(file.toString, splitStart, off, Some(ci.toString),
-                version, cHosts(splitStart, off))
-              splitStart = off
-            }
-          }
-          if (splitStart < meta.dataLength)
-            parts += SSTablePartition(file.toString, splitStart, meta.dataLength, Some(ci.toString),
-              version, cHosts(splitStart, meta.dataLength))
-        }
-      case None =>
-        // S3: row-boundary splits from the Index.db sidecar
-        val idx = new Path(file.getParent, file.getName.replace("-Data.db", "-Index.db"))
-        val len = st.getLen
-        if (len <= blocksize || !fs.exists(idx)) {
-          parts += SSTablePartition(file.toString, 0L, len, None, version,
-            hostsFor(fs, st, 0L, len))
-        } else {
-          val in = fs.open(idx)
-          val offsets = try IndexScanner.dataOffsets(in).toArray finally in.close()
-          var splitStart = 0L
-          offsets.foreach { off =>
-            if (off - splitStart >= blocksize) {
-              parts += SSTablePartition(file.toString, splitStart, off, None, version,
-                hostsFor(fs, st, splitStart, off - splitStart))
-              splitStart = off
-            }
-          }
-          if (splitStart < len) parts += SSTablePartition(file.toString, splitStart, len, None,
-            version, hostsFor(fs, st, splitStart, len - splitStart))
-        }
+        })
+      // S3: row-boundary splits from the Index.db sidecar
+      case None => (st.getLen, (start, end) => hostsFor(fs, st, start, end - start))
     }
-    parts.toSeq
+    val idx = new Path(file.getParent, file.getName.replace("-Data.db", "-Index.db"))
+    val bounds = ArrayBuffer[(Long, Long)]()
+    if (length <= blocksize || !fs.exists(idx)) bounds += ((0L, length))
+    else {
+      val in = fs.open(idx)
+      val offsets = try IndexScanner.dataOffsets(in).toArray finally in.close()
+      var splitStart = 0L
+      offsets.foreach { off =>
+        if (off - splitStart >= blocksize) {
+          bounds += ((splitStart, off))
+          splitStart = off
+        }
+      }
+      if (splitStart < length) bounds += ((splitStart, length))
+    }
+    bounds.toSeq.map { case (start, end) =>
+      SSTablePartition(file.toString, start, end, ci.map(_.toString), version, hosts(start, end))
+    }
   }
 
   /** S6: greedy bin-packing of small splits (default on; the

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.GraftSSTable
 
 /** CLI analog of the reference's `scripts/sstable2json` wrapper
@@ -44,13 +43,7 @@ object SSTable2Json {
       case _ => "LZ4Compressor"
     }).getOrElse("LZ4Compressor")
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .appName("sstable2json")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession("sstable2json", master = sys.env.get("SPARK_MASTER"))
     try {
       val typeOpts = Seq(
         opt("schemafile").map(p => "cql" ->

@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * argue 100 TB readiness from sf0.1 — this tool makes the claim
   * falsifiable by producing a slice `factor`× larger with the SAME
   * per-row statistics plus the adversarial realism the small corpus
-  * lacks, so `graft.BenchScale` can measure per-query scaling
+  * lacks, so `graft.Bench` (two-dir mode) can measure per-query scaling
   * exponents instead of trusting prose.
   *
   * Scaling rules (key strides keep every copy disjoint):
@@ -43,14 +43,7 @@ object ScaleUp {
     val Array(src, out, factorS) = args
     val factor = factorS.toInt
     require(factor >= 1 && factor <= 1000, s"factor out of range: $factor")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-scaleup")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession("graft-scaleup")
     scale(spark, src, out, factor)
     spark.stop()
   }

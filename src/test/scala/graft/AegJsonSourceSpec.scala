@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sstable.{AegCell, AegJsonCodec, AegRow}
@@ -8,15 +7,10 @@ import graft.sstable.{AegCell, AegJsonCodec, AegRow}
 /** The pruning aeg-JSON DSv2 source: parity with the hand codec on
   * the reference's own golden output, newline-aligned splits,
   * projection pushed into the parse, and F5 clean semantics. */
-class AegJsonSourceSpec extends AnyFunSuite {
+class AegJsonSourceSpec extends AnyFunSuite with SparkSuite {
   private val goldenDir =
     "/root/reference/aegisthus-hadoop/src/test/resources/testdata/2.0.10/randomtable/aeg_json_output"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("reads the reference golden output; byte-range splits agree with whole-file read") {
     import spark.implicits._

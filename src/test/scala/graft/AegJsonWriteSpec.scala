@@ -2,20 +2,13 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sstable.{AtomRec, SSTableFormat}
 
 /** DSv2 WRITE path for aeg-JSON (`df.write.format("aegjson")`):
   * load → transform → save round-trips byte-exactly, and the
   * job-level commit publishes nothing until every task succeeds. */
-class AegJsonWriteSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class AegJsonWriteSpec extends AnyFunSuite with SparkSuite {
 
   private def mkRows(n: Int) = {
     import spark.implicits._

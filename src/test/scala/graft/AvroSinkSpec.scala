@@ -8,14 +8,7 @@ import graft.sstable.{AvroSink, CellOut, CompactedRow, SSTableFormat}
 /** Avro sink parity with the reference's `SSTableExport` export path
   * (`SSTableExport.java:174-181`): pivoted relational rows round-trip
   * through Avro container files, committed speculation-safe. */
-class AvroSinkSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class AvroSinkSpec extends AnyFunSuite with SparkSuite {
 
   private def conf = new org.apache.hadoop.conf.Configuration()
 

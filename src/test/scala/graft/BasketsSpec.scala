@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Baskets
 
@@ -8,13 +7,7 @@ import graft.operators.Baskets
   * micro support/confidence/lift (including the floor-composed lift
   * surrogate), duplicate-row collapse, canonical pair order, guards,
   * and partition independence. */
-class BasketsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BasketsSpec extends AnyFunSuite with SparkSuite {
 
   private def run(rows: Seq[(Long, Long)], minPairs: Long, parts: Int = 4) = {
     import spark.implicits._

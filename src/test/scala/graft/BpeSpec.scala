@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions.col
 import graft.operators.Bpe
@@ -12,17 +11,7 @@ import graft.operators.Bpe
   * loop discipline (no leaked checkpoint blocks after the terminal
   * action).
   */
-class BpeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.CassFunctions.registerAll(s)
-    s
-  }
+class BpeSpec extends AnyFunSuite with SparkSuite {
 
   private def train(docs: Seq[String], steps: Int): Seq[(Long, String, String, Long)] = {
     import spark.implicits._

@@ -9,13 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * Note: suites share one SparkSession (getOrCreate), so all configs
   * are set at runtime and tables/locations are cleaned before use. */
-class BucketingSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BucketingSpec extends AnyFunSuite with SparkSuite {
 
   test("bucketed tables join without a shuffle exchange") {
     val d = "/root/testdata/sf0.001"

@@ -12,18 +12,9 @@ import graft.operators.{Dedup, Similarity, Storage}
   * its pre-call baseline. (Round 7: five operators cached
   * corpus-sized frames forever; a long-lived library session
   * accumulated them without recourse.) */
-class CacheHygieneSpec extends AnyFunSuite {
+class CacheHygieneSpec extends AnyFunSuite with SparkSuite {
   private val sfDir = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.CassFunctions.registerAll(s)
-    s
-  }
 
   private def checkHygiene(name: String)(op: => DataFrame): Unit = {
     val baseCached = spark.sharedState.cacheManager.isEmpty

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Similarity
@@ -14,17 +13,7 @@ import graft.operators.Similarity
   * including the NaN/zero-norm degenerate cases ADVICE r7 flagged,
   * and every analysis/eval-time guard throws instead of silently
   * truncating. */
-class CentroidExprsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.CassFunctions.registerAll(s)
-    s
-  }
+class CentroidExprsSpec extends AnyFunSuite with SparkSuite {
 
   private def nrm(v: Array[Double]): Double = {
     var a = 0.0; var i = 0

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Cluster
 
@@ -8,13 +7,7 @@ import graft.operators.Cluster
   * multi-round convergence), multiple components, cliques, empty
   * graphs, partition independence, and a differential fuzz against an
   * in-memory union-find. */
-class ClusterSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ClusterSpec extends AnyFunSuite with SparkSuite {
 
   private def components(edges: Seq[(Long, Long)], parts: Int = 4): Map[Long, Long] = {
     import spark.implicits._

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,17 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * skipping, buffer release on overflow, and the differential claim
   * the d02 rewrite rests on — one capped pass == the old df-count +
   * broadcast-anti-join + collect three-pass shape. */
-class CollectCappedSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.CassFunctions.registerAll(s)
-    s
-  }
+class CollectCappedSpec extends AnyFunSuite with SparkSuite {
 
   test("groups at the cap survive sorted; groups past the cap are null") {
     import spark.implicits._

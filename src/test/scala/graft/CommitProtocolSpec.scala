@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sstable.TaskCommit
 
@@ -11,13 +10,7 @@ import graft.sstable.TaskCommit
   * `FileOutputCommitter`): duplicate task attempts for one partition
   * must publish exactly one complete file, a failed attempt must leave
   * final paths untouched, and the job must clean its temp tree. */
-class CommitProtocolSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CommitProtocolSpec extends AnyFunSuite with SparkSuite {
 
   private def conf = new org.apache.hadoop.conf.Configuration()
 

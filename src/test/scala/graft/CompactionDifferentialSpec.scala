@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sstable._
 
@@ -15,13 +14,7 @@ import graft.sstable._
   * ties are value-identical (the reference's secondary sort has the
   * same ambiguity: `AegisthusKeySortingComparator` orders by name+ts
   * only). */
-class CompactionDifferentialSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CompactionDifferentialSpec extends AnyFunSuite with SparkSuite {
 
   private def randomAtoms(seed: Long, n: Int): Seq[AtomRec] = {
     val rnd = new scala.util.Random(seed)

@@ -1,19 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sstable._
 
 /** Output-option and guard coverage: trace-source (O2), sort-columns-
   * by-name + legacy formatting (O4/X5), row-size guards (F3/F4), and
   * the engine expressions (X1/X4/X8). */
-class CompactionOptionsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CompactionOptionsSpec extends AnyFunSuite with SparkSuite {
 
   private def cell(name: String, value: String, ts: Long) =
     CellOut(SSTableFormat.KindColumn, name.getBytes, value.getBytes, ts, None, None, None)
@@ -55,7 +48,6 @@ class CompactionOptionsSpec extends AnyFunSuite {
   }
 
   test("engine expressions: cass_render, composite_split, hex casters") {
-    graft.functions.CassFunctions.registerAll(spark)
     import spark.implicits._
     val df = Seq(("cafe".getBytes, "00010000000941")).toDF("b", "h")
     val r = df.selectExpr(

@@ -2,7 +2,6 @@ package graft
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataOutputStream}
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sstable._
 
@@ -11,13 +10,7 @@ import graft.sstable._
   *  - scanner fuzzing: random garbage behind skipCorrupt must never
   *    kill a scan, only count the file.
   */
-class CompressionFuzzSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CompressionFuzzSpec extends AnyFunSuite with SparkSuite {
 
   /** Build a Cassandra-style compressed blob + CompressionInfo bytes
     * for the given payload: chunks of `chunkLen` uncompressed bytes,

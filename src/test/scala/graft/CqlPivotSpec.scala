@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.cql.{CqlPivot, CqlTable}
 import graft.sstable.{CellOut, CompactedRow, SSTableFormat}
@@ -8,14 +7,9 @@ import graft.sstable.{CellOut, CompactedRow, SSTableFormat}
 /** CQL relational pivot (M4) against the reference fixtures whose
   * decoded goldens are known (FIXTURES.md §1.1-1.2), plus synthetic
   * static-column and collection cases. */
-class CqlPivotSpec extends AnyFunSuite {
+class CqlPivotSpec extends AnyFunSuite with SparkSuite {
   private val testRoot = "/root/reference/aegisthus-hadoop/src/test/resources/testdata"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("CQL parse: keys, clustering, static, collections") {
     val t = CqlTable.parse(

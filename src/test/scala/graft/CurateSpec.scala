@@ -1,23 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Curate
 
 /** [[graft.operators.Curate.pipeline]] stage semantics on a synthetic
   * corpus where every stage provably fires, plus the observe-metric
   * contract (per-stage attrition readable after one action). */
-class CurateSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.CassFunctions.registerAll(s)
-    s
-  }
+class CurateSpec extends AnyFunSuite with SparkSuite {
 
   private def corpus() = {
     import spark.implicits._

@@ -10,17 +10,7 @@ import graft.operators.{Decontaminate, Dedup}
   * deliberately saturated image where false positives abound), the
   * no-false-negative invariant, the bit-image replay, and the
   * clean-docs-never-join plan shape. */
-class DecontaminateSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.CassFunctions.registerAll(s)
-    s
-  }
+class DecontaminateSpec extends AnyFunSuite with SparkSuite {
 
   private val P = 1000000007L
 

@@ -1,24 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Dedup
 
 /** The prefix-filtered Jaccard variant must find exactly the same
   * pairs as the full count-join (prefix filtering is exact). */
-class DedupVariantsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // explicit: the suite must pass standalone, not only after a suite
-    // that happens to register the graft_* functions first
-    graft.functions.CassFunctions.registerAll(s)
-    s
-  }
+class DedupVariantsSpec extends AnyFunSuite with SparkSuite {
 
   test("prefix-filtered jaccard == full candidate jaccard") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Dialogue
 
@@ -9,17 +8,7 @@ import graft.operators.Dialogue
   * seed), verbatim user-turn preservation through the scrub,
   * turn-bounded windows, NULL evalPred handling, and a differential
   * fuzz against an in-memory reference. */
-class DialogueSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.CassFunctions.registerAll(s)
-    s
-  }
+class DialogueSpec extends AnyFunSuite with SparkSuite {
 
   private def turnsDf(rows: Seq[(Long, Long, String, String)]) = {
     import spark.implicits._

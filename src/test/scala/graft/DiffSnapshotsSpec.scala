@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sstable._
 
@@ -9,13 +8,7 @@ import graft.sstable._
   * compactions, and a typed CF renders its diff lines with the
   * configured marshal types (matching what writeAegJson would emit),
   * not raw hex. */
-class DiffSnapshotsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DiffSnapshotsSpec extends AnyFunSuite with SparkSuite {
 
   private def writeFixture(file: java.io.File, rows: Seq[CompactedRow]): Unit =
     SparkEntry.writeFixture(file, rows)

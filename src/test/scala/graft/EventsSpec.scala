@@ -1,20 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Events
 
 /** Funnel ordering semantics (strict after, out-of-order events,
   * repeat events), retention offset math, props extraction typing,
   * and share arithmetic — all on hand-built fixtures. */
-class EventsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class EventsSpec extends AnyFunSuite with SparkSuite {
 
   private def ev(rows: (Long, String, String)*) = {
     import spark.implicits._

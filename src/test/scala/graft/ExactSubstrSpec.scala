@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Dedup, TextOps}
 
@@ -9,17 +8,7 @@ import graft.operators.{Dedup, TextOps}
   * prefix-fingerprint tier provably misses, maximal-span merging,
   * the cross-document-only universe, and a brute-force differential
   * fuzz against an in-memory reference. */
-class ExactSubstrSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.CassFunctions.registerAll(s)
-    s
-  }
+class ExactSubstrSpec extends AnyFunSuite with SparkSuite {
 
   private def df(docs: Seq[(Long, String)]) = {
     import spark.implicits._

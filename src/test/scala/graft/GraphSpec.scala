@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Graph, Storage}
 
@@ -8,13 +7,7 @@ import graft.operators.{Graph, Storage}
   * (same floor-division arithmetic the oracle unrolls), dangling and
   * self-loop handling, teleport floor, centrality ordering on a star
   * graph, guards, and storage hygiene. */
-class GraphSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GraphSpec extends AnyFunSuite with SparkSuite {
 
   private def run(edges: Seq[(Long, Long, Long)], iters: Int,
       parts: Int = 4): Map[Long, Long] = {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Importance, Storage}
 
@@ -8,17 +7,7 @@ import graft.operators.{Importance, Storage}
   * parity against an independent Scala replay of the published
   * formula, boundary-tie semantics of the k-th-value threshold, and
   * the empty/short-doc edges. */
-class ImportanceSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.CassFunctions.registerAll(s)
-    s
-  }
+class ImportanceSpec extends AnyFunSuite with SparkSuite {
 
   private val P = 1000000007L
 

@@ -1,20 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Incremental
 
 /** The algebraic-merge contract: merging per-slice rollup states must
   * equal the single-pass rollup of the union, for ANY slicing —
   * differential-fuzzed over random slicings, plus guards. */
-class IncrementalSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class IncrementalSpec extends AnyFunSuite with SparkSuite {
 
   private def events(rows: (String, String, Double)*) = {
     import spark.implicits._

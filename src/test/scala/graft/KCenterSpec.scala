@@ -1,22 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Dedup, Similarity}
 
 /** [[Similarity.kCenterCoreset]] greedy semantics on hand-checkable
   * geometry, and [[Dedup.rareWindowAudit]] k-anonymity counting. */
-class KCenterSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.CassFunctions.registerAll(s)
-    s
-  }
+class KCenterSpec extends AnyFunSuite with SparkSuite {
 
   private def emb(rows: Seq[(Long, Seq[Float])]) = {
     import spark.implicits._

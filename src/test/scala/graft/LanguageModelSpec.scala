@@ -1,26 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.LanguageModel
 
 /** Bigram-LM fluency: in-memory replay of the hashed add-one model
   * and the exact micro arithmetic, fluent-vs-gibberish ordering,
   * degenerate docs, and plan shape. */
-class LanguageModelSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // register the graft_* native expressions explicitly — relying on
-    // an earlier suite having registered them on the shared session
-    // made this spec order-dependent (failed under isolated testOnly)
-    graft.functions.CassFunctions.registerAll(s)
-    s
-  }
+class LanguageModelSpec extends AnyFunSuite with SparkSuite {
 
   private val P = 1000000007L
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{MediaCodec, Multimodal}
 
@@ -8,14 +7,9 @@ import graft.operators.{MediaCodec, Multimodal}
   * through the in-tree PPM/WAV/Y4M parsers exactly; malformed bytes
   * fail with diagnosable errors; the distributed batch-decode and the
   * frame resample agree with scalar recomputation. */
-class MultimodalSpec extends AnyFunSuite {
+class MultimodalSpec extends AnyFunSuite with SparkSuite {
   private val sfDir = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("PPM round trip: encode∘decode is identity on a hand-built fixture") {
     val rgb = Array.tabulate(3 * 2 * 3)(i => (i * 37 % 256).toByte)

@@ -1,22 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Curate, Dedup, Profile}
 
 /** [[Dedup.sourceOverlapSketch]] union-merge semantics and
   * [[Profile.joinAdvisor]] decision branches. */
-class OverlapSketchSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.CassFunctions.registerAll(s)
-    s
-  }
+class OverlapSketchSpec extends AnyFunSuite with SparkSuite {
 
   private def docs(rows: Seq[(Long, String, String)]) = {
     import spark.implicits._

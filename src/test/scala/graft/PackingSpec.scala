@@ -1,19 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Packing
 
 /** Greedy token-budget packing: boundary semantics (exact fit stays,
   * overflow opens a bin, oversize item gets its own bin, first item
   * always opens bin 0) and shuffle/partition invariance. */
-class PackingSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PackingSpec extends AnyFunSuite with SparkSuite {
 
   private def pack(rows: Seq[(String, Long, Long)], budget: Long) = {
     import spark.implicits._

@@ -7,15 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * tests, so a regression that silently de-broadcasts a dim join,
   * breaks scan pruning, or introduces a cartesian product fails CI —
   * not just a per-round manual `.explain` read. */
-class PlanAuditSpec extends AnyFunSuite {
+class PlanAuditSpec extends AnyFunSuite with SparkSuite {
   private val sfDir = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   /** final (post-AQE) physical plan string. */
   private def finalPlan(df: DataFrame): String = {

@@ -1,19 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Profile
 
 /** Profiling semantics on a null-bearing fixture: null counting,
   * exact distinct (nulls excluded, per SQL count(DISTINCT)), min/max
   * ignoring nulls, all-null and single-value columns. */
-class ProfileSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ProfileSpec extends AnyFunSuite with SparkSuite {
 
   test("profile: nulls, distinct, min/max on a hand fixture") {
     import spark.implicits._

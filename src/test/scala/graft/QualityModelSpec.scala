@@ -1,23 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.QualityModel
 
 /** [[graft.operators.QualityModel]]: bit-exact weight parity against
   * an independent Scala replay of the quantized-GD update, separation
   * on the heuristic label, and the empty-doc edge. */
-class QualityModelSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.CassFunctions.registerAll(s)
-    s
-  }
+class QualityModelSpec extends AnyFunSuite with SparkSuite {
 
   private val stopEn = Set("the", "a", "of", "and", "to", "in", "is", "on", "for", "with")
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Joins
@@ -11,16 +10,7 @@ import graft.operators.Joins
   * empty-interval drop, and the plan-shape claim the operator exists
   * for — a hash/SMJ equi-join on the bucket id instead of a
   * nested-loop scan. */
-class RangeJoinSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s
-  }
+class RangeJoinSpec extends AnyFunSuite with SparkSuite {
 
   private def fixture() = {
     import spark.implicits._

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Retrieval
 
@@ -9,13 +8,7 @@ import graft.operators.Retrieval
   * DuckDB oracle runs), self-retrieval sanity, tie-breaks, k capping,
   * query-term truncation, empty-doc exclusion, and plan-shape
   * audits. */
-class RetrievalSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RetrievalSpec extends AnyFunSuite with SparkSuite {
 
   private val corpus = Seq(
     1L -> "the quick brown fox jumps over the lazy dog",

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Curate, Dedup, TextOps}
 
@@ -9,17 +8,7 @@ import scala.util.Random
 /** Randomized property fuzz for the round-15 operators — seeded, so
   * failures reproduce. Each property is an algebraic identity the
   * operator must hold on ANY corpus, not a pinned fixture. */
-class Round15FuzzSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.CassFunctions.registerAll(s)
-    s
-  }
+class Round15FuzzSpec extends AnyFunSuite with SparkSuite {
 
   private def randomCorpus(rng: Random, nDocs: Int, vocab: Int) = {
     import spark.implicits._

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sstable.CassType
 
@@ -9,14 +8,9 @@ import graft.sstable.CassType
   * fixtures → write a NEW sstable in an older target version → feed it
   * back through the pipeline → aeg-JSON must still byte-match the
   * golden file. */
-class SSTableRoundTripSpec extends AnyFunSuite {
+class SSTableRoundTripSpec extends AnyFunSuite with SparkSuite {
   private val testRoot = "/root/reference/aegisthus-hadoop/src/test/resources/testdata"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def goldenLines(caseDir: String): Seq[String] = {
     val src = scala.io.Source.fromFile(s"$testRoot/$caseDir/aeg_json_output/aeg-00000")

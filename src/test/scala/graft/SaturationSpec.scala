@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Dedup, Storage}
 
@@ -12,17 +11,7 @@ import graft.operators.{Dedup, Storage}
   * registered d33 audit query — instead of returning an empty frame
   * indistinguishable from "no duplicates".
   */
-class SaturationSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.CassFunctions.registerAll(s)
-    s
-  }
+class SaturationSpec extends AnyFunSuite with SparkSuite {
 
   private def satMetrics(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
     df.queryExecution.observedMetrics.toSeq.collect {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Dedup
 
@@ -8,17 +7,7 @@ import graft.operators.Dedup
   * overlapping-window coverage union, within-doc repeats, short-doc
   * passthrough, and a differential fuzz against an in-memory
   * reference implementation. */
-class ScrubSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.CassFunctions.registerAll(s)
-    s
-  }
+class ScrubSpec extends AnyFunSuite with SparkSuite {
 
   private val N = 3 // small window so fixtures stay readable
 

@@ -1,22 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Dialogue, Profile}
 
 /** [[Dialogue.sftTokenAccounting]] loss-mask semantics and
   * [[Profile.keySkewAudit]] exact distribution stats. */
-class SftPackingSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.CassFunctions.registerAll(s)
-    s
-  }
+class SftPackingSpec extends AnyFunSuite with SparkSuite {
 
   private def turns(rows: Seq[(Long, Long, String, String)]) = {
     import spark.implicits._

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Similarity, Storage}
 
@@ -9,18 +8,9 @@ import graft.operators.{Similarity, Storage}
   * micro-mean claim), centroid self-assignment, and the banded-LSH
   * near-dup pair contract vs the brute-force N^2 oracle (perfect
   * precision — exact re-rank — plus a recall floor on the fixture). */
-class SimilaritySpec extends AnyFunSuite {
+class SimilaritySpec extends AnyFunSuite with SparkSuite {
   private val sfDir = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.CassFunctions.registerAll(s)
-    s
-  }
 
   test("kmeansUpdate is partition-count independent (order-insensitive integer sums)") {
     val emb = Tables.embeddings(spark, sfDir)

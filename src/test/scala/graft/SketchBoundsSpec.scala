@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** q37's oracle contract is `TRUE` for every sketch error-bound
@@ -8,14 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * land within 5% of the exact values computed in the same plan. This
   * spec pins that invariant at the spare scale factors so a bound
   * regression surfaces before the driver's sf0.01 gate. */
-class SketchBoundsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SketchBoundsSpec extends AnyFunSuite with SparkSuite {
 
   private def assertAllBoundsHold(sfDir: String): Unit = {
     val rows = queries.Relational2.q37.run(spark, sfDir).collect()

@@ -8,13 +8,7 @@ import graft.sstable._
   * many small sstables must bin-pack into few scan tasks (100 MB /
   * <= 200 members by default) without changing results, and a corrupt
   * member of a combined partition must lose only its own split. */
-class SplitCombineSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SplitCombineSpec extends AnyFunSuite with SparkSuite {
 
   private def writeFixture(dir: java.io.File, n: Int): Unit = {
     (1 to n).foreach { i =>
@@ -142,6 +136,38 @@ class SplitCombineSpec extends AnyFunSuite {
       mixedSrc.count(_.contains("zz_extra")) == 2 &&
       !mixedSrc.exists(_.contains("batch_id=001")),
       s"batch prune must act only among batch_id siblings, got ${mixedSrc.toSeq}")
+  }
+
+  test("plain and LZ4 copies of one table plan the same row-boundary splits") {
+    val rows = (0 until 600).map { i =>
+      CompactedRow(f"k$i%04d".getBytes, Long.MinValue, (0 until 3).map { j =>
+        CellOut(SSTableFormat.KindColumn, s"c$j".getBytes,
+          (s"v$j-$i" + "x" * ((i * 7 + j) % 23)).getBytes, 1000L + j, None, None, None)
+      })
+    }
+    val root = java.nio.file.Files.createTempDirectory("splitparity").toFile
+    def write(name: String, compress: Boolean): String = {
+      val dir = new java.io.File(root, name).toString
+      GraftSSTable.writeSSTable(spark.createDataset(rows)(
+        org.apache.spark.sql.Encoders.product[CompactedRow]), dir,
+        compress = compress, chunkLength = 1024, writeIndex = true)
+      dir
+    }
+    val plain = write("plain", compress = false)
+    val lz4 = write("lz4", compress = true)
+    val opts = Map("blocksize" -> "4096", "combine" -> "false")
+    def bounds(dir: String): Seq[(Long, Long)] =
+      new SSTableScan(opts + ("path" -> dir), SSTableSource.Schema).planInputPartitions()
+        .map { case p: SSTablePartition => (p.start, p.end) }.toSeq
+    assert(bounds(lz4).size > 1, s"expected several splits, got ${bounds(lz4)}")
+    assert(bounds(plain) == bounds(lz4))
+    def compacted(dir: String) =
+      GraftSSTable.compact(GraftSSTable.readAtoms(spark, dir, opts)).collect()
+        .map(r => (new String(r.key), r.columns.map(c =>
+          (new String(c.name), new String(c.value), c.ts)))).sortBy(_._1).toSeq
+    val expected = compacted(plain)
+    assert(expected.size == rows.size)
+    assert(compacted(lz4) == expected)
   }
 
   test("split planning fans out sidecar probes on a thread pool") {

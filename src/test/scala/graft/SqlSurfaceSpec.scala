@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The pure-SQL consumption path: a user with no graft imports can
@@ -8,19 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * `USING aegjson` resolve through DataSourceRegister) and query them
   * with engine expressions — the "switch to this library" surface a
   * SQL-only shop would actually use. */
-class SqlSurfaceSpec extends AnyFunSuite {
+class SqlSurfaceSpec extends AnyFunSuite with SparkSuite {
 
   private val fixtures = s"${TestUtil.fixturesRoot}/2.0.10/randomtable/input"
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.CassFunctions.registerAll(s)
-    s
-  }
 
   test("CREATE TEMPORARY VIEW ... USING sstable + engine expressions, SQL only") {
     spark.sql(s"""CREATE OR REPLACE TEMPORARY VIEW atoms

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Bpe, Similarity, Storage}
 
@@ -10,18 +9,9 @@ import graft.operators.{Bpe, Similarity, Storage}
   * assert the failure paths release every block too — a library
   * caller whose job dies must not inherit orphaned cache or
   * checkpoint blocks that only the ContextCleaner would ever free. */
-class StorageChaosSpec extends AnyFunSuite {
+class StorageChaosSpec extends AnyFunSuite with SparkSuite {
   private val sfDir = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.CassFunctions.registerAll(s)
-    s
-  }
 
   /** run `op`, require it to throw, and assert storage is back to the
     * pre-call baseline: nothing new in the CacheManager, nothing new

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sstable.{AtomRec, CassType, CellOut, CompactedRow, SSTableFormat, SSTableVersion, SSTableWriter}
 import graft.streaming.StreamingCompaction
@@ -8,14 +7,9 @@ import graft.streaming.StreamingCompaction
 /** Streaming compaction parity: the incremental state machine must
   * agree with the batch merge on the reference fixtures (RT-free
   * corpus), and be order-insensitive (associativity check). */
-class StreamingCompactionSpec extends AnyFunSuite {
+class StreamingCompactionSpec extends AnyFunSuite with SparkSuite {
   private val testRoot = "/root/reference/aegisthus-hadoop/src/test/resources/testdata"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("incremental compaction (streaming engine) matches batch merge") {
     import spark.implicits._

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sstable._
 
@@ -11,13 +10,7 @@ import graft.sstable._
   * atom stream drives
   * [[graft.streaming.StreamingCompaction.compactIncremental]] with
   * LWW state carried ACROSS batches. */
-class StreamingSourceSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StreamingSourceSpec extends AnyFunSuite with SparkSuite {
 
   private def writeFile(dir: java.io.File, gen: Int,
       rows: Seq[(String, Seq[(String, String, Long)])]): Unit = {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.TextOps
 
@@ -9,17 +8,7 @@ import graft.operators.TextOps
   * throws INVALID_INDEX_OF_ZERO under ANSI element_at), all-hapax,
   * no-hapax, and single-token cases.
   */
-class TextOpsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.CassFunctions.registerAll(s)
-    s
-  }
+class TextOpsSpec extends AnyFunSuite with SparkSuite {
 
   private def div(docs: Seq[(Long, String)]): Map[Long, (Long, Long, Long, Long, Long)] = {
     import spark.implicits._

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sstable._
 
@@ -23,13 +22,7 @@ import graft.sstable._
   *     column order follows the comparator and that a range tombstone
   *     only deletes under the comparator that covers it.
   */
-class TypedComparatorSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TypedComparatorSpec extends AnyFunSuite with SparkSuite {
 
   private def longB(v: Long): Array[Byte] = ByteBuffer.allocate(8).putLong(v).array()
   private def intB(v: Int): Array[Byte] = ByteBuffer.allocate(4).putInt(v).array()

@@ -1,22 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Curate, TextOps}
 
 /** [[Curate.waterfillBudget]] saturation semantics and invariants, and
   * [[TextOps.zipfFit]] against a hand-computable distribution. */
-class WaterfillSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.CassFunctions.registerAll(s)
-    s
-  }
+class WaterfillSpec extends AnyFunSuite with SparkSuite {
 
   private def mk(rows: Seq[(Long, String, String)]) = {
     import spark.implicits._

@@ -11,12 +11,13 @@
 #      line is fit-to-2000-chars and may drop queries);
 #   2. assemble the closing artifact from the DETAIL file — the same
 #      machine-readable shape BENCH_CLOSING_r13.json carried: totals,
-#      split, calib, contended list, and a FLAT full-name per-query
-#      min map;
+#      split, calib, contended list, failed list, and a FLAT
+#      full-name per-query min map;
 #   3. GUARD: refuse to write (exit 1, artifact absent — a missing
 #      file is a louder failure than a wrong one) unless
-#      total_batch_s, total_stream_gate_s and a non-empty queries map
-#      parse out of the detail payload.
+#      total_batch_s, total_stream_gate_s, the failed-query list and a
+#      non-empty queries map parse out of the detail payload (failed
+#      queries carry no time and are absent from the queries map).
 #
 # Usage: tools/bench_closing.sh <round> [sfdir] [n_reps]
 set -euo pipefail
@@ -38,9 +39,11 @@ detail_path, out_path, reps = sys.argv[1], sys.argv[2], int(sys.argv[3])
 with open(detail_path) as f:
     d = json.load(f)
 # the guard: a closing artifact without its payload is the r14 defect
-for key in ("total_batch_s", "total_stream_gate_s", "queries", "calib"):
+for key in ("total_batch_s", "total_stream_gate_s", "queries", "calib",
+            "failed_queries"):
     assert key in d, f"closing capture missing {key!r} — refusing to write {out_path}"
 assert isinstance(d["queries"], dict) and d["queries"], "empty per-query map"
+assert isinstance(d["failed_queries"], list), "failed_queries is not a list"
 for q, rec in d["queries"].items():
     assert "min" in rec, f"query {q} missing min"
 closing = {
@@ -53,6 +56,8 @@ closing = {
     "n": reps,
     "n_queries": len(d["queries"]),
     "contended_queries": d.get("contended_queries", []),
+    "n_failed": len(d["failed_queries"]),
+    "failed_queries": d["failed_queries"],
     "sf": d.get("sf"),
     "queries": {q: rec["min"]
                 for q, rec in sorted(d["queries"].items(),
@@ -64,6 +69,7 @@ with open(out_path, "w") as f:
     json.dump(closing, f)
 print(f"[bench_closing] wrote {out_path}: total={closing['value']}s "
       f"batch={closing['total_batch_s']}s stream={closing['total_stream_gate_s']}s "
-      f"n_queries={closing['n_queries']} contended={closing['contended_queries']}",
+      f"n_queries={closing['n_queries']} contended={closing['contended_queries']} "
+      f"failed={closing['failed_queries']}",
       file=sys.stderr)
 EOF
