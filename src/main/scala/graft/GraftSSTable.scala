@@ -238,8 +238,6 @@ object GraftSSTable {
       maxColSize: Long = -1L): Unit = {
     val spark = rows.sparkSession
     val lines = aegJsonLines(rows, keyType, nameType, valueType, maxColSize)
-    val sorted = lines.toDF("key", "line").repartitionByRange(numFiles, col("key"))
-      .sortWithinPartitions(col("key"))
     val out = outDir
     val hconf = new org.apache.spark.util.SerializableConfiguration(
       spark.sessionState.newHadoopConf())
@@ -248,19 +246,36 @@ object GraftSSTable {
     // can no longer interleave writes into a live final path
     val jobId = java.util.UUID.randomUUID().toString
     TaskCommit.preClean(hconf.value, out, (0 until numFiles).map(i => f"aeg-$i%05d"))
-    sorted.select("line").rdd.map(_.getString(0))
-      .mapPartitionsWithIndex { (idx, it) =>
-        TaskCommit.withTaskAttemptDir(hconf.value, out, jobId) { (fs, dir) =>
-          val path = new org.apache.hadoop.fs.Path(dir, f"aeg-$idx%05d")
-          val os = fs.create(path, true)
-          val w = new java.io.BufferedWriter(new java.io.OutputStreamWriter(os, java.nio.charset.StandardCharsets.UTF_8))
-          it.foreach { l => w.write(l); w.write('\n') }
-          w.close()
-        }
-        Iterator.single(idx)
-      }.count()
-    TaskCommit.cleanupJob(hconf.value, out, jobId)
+    withRangeInput(lines.toDF("key", "line"), numFiles) { in =>
+      in.repartitionByRange(numFiles, col("key")).sortWithinPartitions(col("key"))
+        .select("line").rdd.map(_.getString(0))
+        .mapPartitionsWithIndex { (idx, it) =>
+          TaskCommit.withTaskAttemptDir(hconf.value, out, jobId) { (fs, dir) =>
+            val path = new org.apache.hadoop.fs.Path(dir, f"aeg-$idx%05d")
+            val os = fs.create(path, true)
+            val w = new java.io.BufferedWriter(new java.io.OutputStreamWriter(os, java.nio.charset.StandardCharsets.UTF_8))
+            it.foreach { l => w.write(l); w.write('\n') }
+            w.close()
+          }
+          Iterator.single(idx)
+        }.count()
+      TaskCommit.cleanupJob(hconf.value, out, jobId)
+    }
   }
+
+  /** Runs a sink's write and commit over `input`, the input of its
+    * `repartitionByRange(numFiles, key)`. With more than one file the
+    * range partitioner first runs a sampling job over that input, which
+    * without a cache would run the compaction a second time (shuffle
+    * read, sort, merge, render) and count every row into `rowsWritten`
+    * twice; the input is therefore persisted for the sampling job and
+    * the write to share, and dropped once the commit is done. */
+  private def withRangeInput(input: DataFrame, numFiles: Int)(write: DataFrame => Unit): Unit =
+    if (numFiles <= 1) write(input)
+    else {
+      val cached = input.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try write(cached) finally cached.unpersist()
+    }
 
   /** Write compacted rows as new SSTables (M3 write surface):
     * `<dataset>-<version>-<part>-Data.db` per partition, rows ordered
@@ -291,65 +306,66 @@ object GraftSSTable {
     TaskCommit.preClean(hconf.value, out, (0 until numFiles).flatMap(i => Seq(
       f"$ds-$ver-$i%010d-Data.db", f"$ds-$ver-$i%010d-CompressionInfo.db",
       f"$ds-$ver-$i%010d-Index.db")))
-    rows.toDF("key", "deletedAt", "columns")
-      .repartitionByRange(numFiles, col("key"))
-      .sortWithinPartitions(col("key"))
-      .as(org.apache.spark.sql.Encoders.product[CompactedRow])
-      .rdd
-      .mapPartitionsWithIndex { (idx, it) =>
-        // all files are written attempt-private and published by
-        // rename at task commit; name order puts the CompressionInfo
-        // and Index sidecars in place before their Data.db
-        TaskCommit.withTaskAttemptDir(hconf.value, out, jobId) { (fs, dir) =>
-          val path = new org.apache.hadoop.fs.Path(dir, f"$ds-$ver-$idx%010d-Data.db")
-          val raw = new java.io.BufferedOutputStream(fs.create(path, true))
-          val v = SSTableVersion(ver)
-          val cos = if (compress) Some(new CompressionOutputStream(raw, chunkLength, cdc)) else None
-          // the Index.db sidecar records each row's offset in
-          // UNCOMPRESSED space (the scanner's IndexScanner contract —
-          // for compressed tables the split planner maps those to
-          // chunk boundaries), so the counter sits ABOVE the
-          // compressor on the plain byte stream
-          var uPos = 0L
-          val target: java.io.OutputStream = cos.getOrElse(raw)
-          val counted = new java.io.OutputStream {
-            override def write(b: Int): Unit = { target.write(b); uPos += 1 }
-            override def write(b: Array[Byte], off: Int, len: Int): Unit = {
-              target.write(b, off, len); uPos += len
+    withRangeInput(rows.toDF("key", "deletedAt", "columns"), numFiles) { in =>
+      in.repartitionByRange(numFiles, col("key"))
+        .sortWithinPartitions(col("key"))
+        .as(org.apache.spark.sql.Encoders.product[CompactedRow])
+        .rdd
+        .mapPartitionsWithIndex { (idx, it) =>
+          // all files are written attempt-private and published by
+          // rename at task commit; name order puts the CompressionInfo
+          // and Index sidecars in place before their Data.db
+          TaskCommit.withTaskAttemptDir(hconf.value, out, jobId) { (fs, dir) =>
+            val path = new org.apache.hadoop.fs.Path(dir, f"$ds-$ver-$idx%010d-Data.db")
+            val raw = new java.io.BufferedOutputStream(fs.create(path, true))
+            val v = SSTableVersion(ver)
+            val cos = if (compress) Some(new CompressionOutputStream(raw, chunkLength, cdc)) else None
+            // the Index.db sidecar records each row's offset in
+            // UNCOMPRESSED space (the scanner's IndexScanner contract —
+            // for compressed tables the split planner maps those to
+            // chunk boundaries), so the counter sits ABOVE the
+            // compressor on the plain byte stream
+            var uPos = 0L
+            val target: java.io.OutputStream = cos.getOrElse(raw)
+            val counted = new java.io.OutputStream {
+              override def write(b: Int): Unit = { target.write(b); uPos += 1 }
+              override def write(b: Array[Byte], off: Int, len: Int): Unit = {
+                target.write(b, off, len); uPos += len
+              }
+              override def flush(): Unit = target.flush()
+              override def close(): Unit = target.close()
             }
-            override def flush(): Unit = target.flush()
-            override def close(): Unit = target.close()
-          }
-          val os = new java.io.DataOutputStream(counted)
-          val ix = if (writeIndex) {
-            val ixPath = new org.apache.hadoop.fs.Path(dir, f"$ds-$ver-$idx%010d-Index.db")
-            Some(new java.io.DataOutputStream(
-              new java.io.BufferedOutputStream(fs.create(ixPath, true))))
-          } else None
-          it.foreach { row =>
-            // entry layout mirrors IndexScanner exactly:
-            // [u16 keyLen][key][i64 dataOffset][i32 promotedLen = 0]
-            ix.foreach { i =>
-              i.writeShort(row.key.length); i.write(row.key)
-              i.writeLong(uPos); i.writeInt(0)
+            val os = new java.io.DataOutputStream(counted)
+            val ix = if (writeIndex) {
+              val ixPath = new org.apache.hadoop.fs.Path(dir, f"$ds-$ver-$idx%010d-Index.db")
+              Some(new java.io.DataOutputStream(
+                new java.io.BufferedOutputStream(fs.create(ixPath, true))))
+            } else None
+            it.foreach { row =>
+              // entry layout mirrors IndexScanner exactly:
+              // [u16 keyLen][key][i64 dataOffset][i32 promotedLen = 0]
+              ix.foreach { i =>
+                i.writeShort(row.key.length); i.write(row.key)
+                i.writeLong(uPos); i.writeInt(0)
+              }
+              SSTableWriter.writeRow(os, row, v)
             }
-            SSTableWriter.writeRow(os, row, v)
+            ix.foreach(_.close())
+            cos.foreach { c =>
+              val (dataLength, offsets) = c.finish()
+              val ciPath = new org.apache.hadoop.fs.Path(dir,
+                f"$ds-$ver-$idx%010d-CompressionInfo.db")
+              val ci = new java.io.DataOutputStream(fs.create(ciPath, true))
+              CompressionOutputStream.writeCompressionInfo(
+                ci, cdc, chunkLength, dataLength, offsets)
+              ci.close()
+            }
+            os.close()
           }
-          ix.foreach(_.close())
-          cos.foreach { c =>
-            val (dataLength, offsets) = c.finish()
-            val ciPath = new org.apache.hadoop.fs.Path(dir,
-              f"$ds-$ver-$idx%010d-CompressionInfo.db")
-            val ci = new java.io.DataOutputStream(fs.create(ciPath, true))
-            CompressionOutputStream.writeCompressionInfo(
-              ci, cdc, chunkLength, dataLength, offsets)
-            ci.close()
-          }
-          os.close()
-        }
-        Iterator.single(idx)
-      }.count()
-    TaskCommit.cleanupJob(hconf.value, out, jobId)
+          Iterator.single(idx)
+        }.count()
+      TaskCommit.cleanupJob(hconf.value, out, jobId)
+    }
   }
 
   /** Read aeg-JSON output back as a DataFrame (the Pig-loader

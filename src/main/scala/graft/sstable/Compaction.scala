@@ -22,8 +22,9 @@ final case class CompactedRow(key: Array[Byte], deletedAt: Long, columns: Seq[Ce
   * with Cassandra's `RangeTombstone.Tracker` semantics:
   *
   *  - row deletedAt = max over all fragments' markedForDeleteAt;
-  *  - last-writer-wins per column name (strictly-greater timestamp
-  *    replaces — first wins ties, matching `:154-163`);
+  *  - last-writer-wins per column name, equal timestamps resolved by
+  *    [[reconcile]] (Cassandra 2.0 `Column.reconcile`) so the winner
+  *    does not depend on the order the shuffle delivers tied cells;
   *  - a column is discarded if any open range tombstone covers its
   *    name with markedForDeleteAt >= column ts (`:142-153`);
   *  - range tombstones are never emitted (`:164-165,186-187`);
@@ -32,6 +33,30 @@ final case class CompactedRow(key: Array[Byte], deletedAt: Long, columns: Seq[Ce
   *  - maxRowSize stops accumulation (F3, `:89-96`).
   */
 object Compaction {
+
+  /** The surviving cell of two cells with comparator-equal names —
+    * Cassandra 2.0 `Column.reconcile`: the higher timestamp wins; at
+    * equal timestamps a tombstone (`KindDeleted`) beats a live cell,
+    * otherwise the greater value wins, compared as `ByteBuffer.compareTo`
+    * does (signed bytes, then length). Cells that still tie are ordered
+    * by name bytes, kind, ttl and local deletion time, so the result
+    * never depends on argument order. Counters keep the first argument
+    * at equal timestamps, as before: Cassandra merges counter contexts
+    * instead, which this merge does not model. */
+  def reconcile(a: CellOut, b: CellOut): CellOut =
+    if (a.ts != b.ts) { if (b.ts > a.ts) b else a }
+    else if (a.kind == SSTableFormat.KindCounter || b.kind == SSTableFormat.KindCounter) a
+    else if ((a.kind == SSTableFormat.KindDeleted) != (b.kind == SSTableFormat.KindDeleted)) {
+      if (b.kind == SSTableFormat.KindDeleted) b else a
+    } else {
+      val c = Iterator(
+        java.util.Arrays.compare(a.value, b.value),
+        java.util.Arrays.compare(a.name, b.name),
+        a.kind.compareTo(b.kind),
+        Ordering[Option[Int]].compare(a.ttl, b.ttl),
+        Ordering[Option[Int]].compare(a.localDeletionTime, b.localDeletionTime)).find(_ != 0)
+      if (c.exists(_ < 0)) b else a
+    }
 
   /** name ordering must match the shuffle sort order; default BytesType
     * (unsigned lexicographic — same as Spark's BinaryType ordering). */
@@ -100,7 +125,7 @@ object Compaction {
                 // (e.g. Decimal 2.5 vs 2.50, non-minimal varints) and
                 // those must collapse to one LWW winner
                 else if (nameType.compare(curr.name, cell.name) == 0) {
-                  if (cell.ts > curr.ts) curr = cell // LWW, first wins ties
+                  curr = reconcile(curr, cell)
                 } else {
                   columns += curr
                   curr = cell

@@ -267,23 +267,54 @@ object SSTableSource {
     }
   }
 
-  /** S6: greedy bin-packing of small splits (default on; the
-    * reference's 100 MB / <= 200-member combined splits). */
-  def combineSplits(parts: Seq[SSTablePartition], options: Map[String, String]): Array[InputPartition] = {
+  /** The core floor of split combining: the partition count Spark's own
+    * file sources plan against (`FilePartition.maxSplitBytes`) —
+    * `spark.sql.files.minPartitionNum`, else
+    * `spark.sql.leafNodeDefaultParallelism`, else the context's default
+    * parallelism (the core count under `local[n]`). */
+  def scanParallelism(spark: SparkSession): Int = {
+    val conf = spark.sessionState.conf
+    conf.filesMinPartitionNum
+      .orElse(conf.getConf(org.apache.spark.sql.internal.SQLConf.LEAF_NODE_DEFAULT_PARALLELISM))
+      .getOrElse(spark.sparkContext.defaultParallelism)
+  }
+
+  /** S6 split combining (default on): small splits share a scan task, as
+    * in the reference's `AegisthusCombinedInputFormat`, but the bins are
+    * byte-balanced over at least `parallelism` tasks instead of filled
+    * greedily to `combinesize` — a column family smaller than one
+    * `combinesize` no longer scans on one core. The splits, in listing
+    * order, go to `k = max(⌈total / combinesize⌉, min(parallelism,
+    * #splits), ⌈#splits / combinemembers⌉)` contiguous bins: a split
+    * lands in bin `⌊k · (bytes before it + half its size) / total⌋`, and
+    * a bin holding more than `combinemembers` (default 200) splits is cut
+    * into runs of that many. Contiguous bins keep adjacent splits of one
+    * file in one task, and a 10k-file snapshot still plans at most
+    * `max(⌈total / combinesize⌉, parallelism, ⌈#splits / 200⌉)` tasks,
+    * never one per file. `combinesize` defaults to 100 MiB;
+    * `parallelism` is [[scanParallelism]]. */
+  def combineSplits(parts: Seq[SSTablePartition], options: Map[String, String],
+      parallelism: Int): Array[InputPartition] = {
     if (!options.getOrElse("combine", "true").toBoolean) parts.toArray[InputPartition]
     else {
       val target = options.getOrElse("combinesize", (100L * 1024 * 1024).toString).toLong
       val maxMembers = options.getOrElse("combinemembers", "200").toInt
+      val total = math.max(parts.map(_.size).sum, 1L).toDouble
+      val k = Seq(math.ceil(total / target), math.min(parallelism, parts.size).toDouble,
+        math.ceil(parts.size.toDouble / maxMembers)).max
       val out = ArrayBuffer[InputPartition]()
       val bin = ArrayBuffer[SSTablePartition]()
-      var binSize = 0L
+      var binIdx = -1L
+      var before = 0L
       parts.foreach { p =>
-        if (bin.nonEmpty && (binSize + p.size > target || bin.length >= maxMembers)) {
+        val idx = (k * (before + p.size / 2.0) / total).toLong
+        if (bin.nonEmpty && (idx != binIdx || bin.length >= maxMembers)) {
           out += SSTableCombinedPartition(bin.toArray)
-          bin.clear(); binSize = 0L
+          bin.clear()
         }
         bin += p
-        binSize += p.size
+        binIdx = idx
+        before += p.size
       }
       if (bin.nonEmpty) out += SSTableCombinedPartition(bin.toArray)
       out.toArray
@@ -363,9 +394,12 @@ final case class SSTablePartition(
 }
 
 /** S6 split combining (reference
-  * `AegisthusCombinedInputFormat.java:56-102`): many small sstables
-  * bin-packed into one task — a production snapshot dir with 10k tiny
-  * files must not become 10k tasks. The reader chains member scanners
+  * `AegisthusCombinedInputFormat.java:56-102`): one scan task over a
+  * contiguous run of splits in listing order — a production snapshot
+  * dir with 10k tiny files must not become 10k tasks, and a small
+  * column family must still fill every core (bins are byte-balanced
+  * over at least the scan parallelism; see
+  * [[SSTableSource.combineSplits]]). The reader chains member scanners
   * sequentially and absorbs corruption per member. Locality is the
   * members' majority hosts by covered bytes (the reference intersects,
   * `AegCombinedSplit.java:82-97`; a byte-weighted majority degrades
@@ -448,7 +482,7 @@ final class SSTableScan(options: Map[String, String], required: StructType,
     SSTableSource.corruptFiles = Some(acc)
     accForFactory = acc
 
-    SSTableSource.combineSplits(parts, options)
+    SSTableSource.combineSplits(parts, options, SSTableSource.scanParallelism(SparkSession.active))
   }
 
   private var accForFactory: LongAccumulator = _
@@ -581,7 +615,7 @@ final class SSTableReaderFactory(
   * once written (Cassandra's own contract), so the ordered prefix of
   * length N is stable across listings and `[start, end)` addresses a
   * deterministic batch of new files. Each micro-batch plans its files
-  * through the same row-boundary splitter, bin-packing,
+  * through the same row-boundary splitter, core-aware split combining,
   * corrupt-absorb and locality machinery as the batch scan. */
 final class SSTableMicroBatchStream(options: Map[String, String], required: StructType)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
@@ -622,7 +656,8 @@ final class SSTableMicroBatchStream(options: Map[String, String], required: Stru
     val blocksize = options.getOrElse("blocksize", (64L * 1024 * 1024).toString).toLong
     val batch = listSorted().slice(s, e)
     SSTableSource.combineSplits(
-      SSTableSource.planFilesParallel(batch, blocksize, options.get("version")), options)
+      SSTableSource.planFilesParallel(batch, blocksize, options.get("version")), options,
+      SSTableSource.scanParallelism(SparkSession.active))
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

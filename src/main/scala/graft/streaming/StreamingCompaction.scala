@@ -45,9 +45,13 @@ object StreamingCompaction {
     rt.minHex <= nameHex && nameHex <= rt.maxHex
 
   /** Merge a batch of atoms into row state — associative and
-    * commutative up to timestamp ties (LWW keeps the higher ts; equal
-    * ts keeps the incumbent, matching the batch merge's sorted-input
-    * behavior for distinct values). Order-independent for counts:
+    * commutative up to timestamp ties. LWW keeps the higher ts; at equal
+    * ts a tombstone (`KindDeleted`) replaces a live cell, the tombstone
+    * half of the batch merge's [[graft.sstable.Compaction.reconcile]].
+    * The state keeps no values, so the value half of that rule (greater
+    * value wins) has nothing to compare and any other tie keeps the
+    * incumbent; counters are treated like any other cell here.
+    * Order-independent for counts:
     * the RT death rule is a global predicate, enforced both on cell
     * admission and retroactively when an RT lands. */
   def mergeAtoms(st: RowState, atoms: Iterator[AtomRec]): RowState = {
@@ -70,7 +74,8 @@ object StreamingCompaction {
           val ts = a.ts.get
           if (!rts.exists(rt => covers(rt, nameHex) && rt.ts >= ts)) {
             cells.get(nameHex) match {
-              case Some(c) if ts <= c.ts => ()
+              case Some(c) if ts < c.ts || (ts == c.ts &&
+                  (a.kind != SSTableFormat.KindDeleted || c.kind == SSTableFormat.KindDeleted)) => ()
               case _ => cells = cells.updated(nameHex, CellSt(ts, a.kind))
             }
           }

@@ -10,10 +10,12 @@ import graft.sstable._
   * makes the engine's answer well-defined on a 1000-executor cluster,
   * where both are scheduling accidents.
   *
-  * Values are a function of (name, ts) so reference-inherited equal-ts
-  * ties are value-identical (the reference's secondary sort has the
-  * same ambiguity: `AegisthusKeySortingComparator` orders by name+ts
-  * only). */
+  * In the random soup, values are a function of (name, ts), so its
+  * equal-ts ties are value-identical; the generated-table test below
+  * ties cells with different values and tombstones, which
+  * `Compaction.reconcile` resolves the same way in every order (the
+  * reference's secondary sort orders by name+ts only, so its winner
+  * depended on arrival order). */
 class CompactionDifferentialSpec extends AnyFunSuite with SparkSuite {
 
   private def randomAtoms(seed: Long, n: Int): Seq[AtomRec] = {
@@ -66,5 +68,26 @@ class CompactionDifferentialSpec extends AnyFunSuite with SparkSuite {
       val out = render(GraftSSTable.compact(scrambled, numPartitions = 5).collect().toSeq)
       assert(out == base, s"seed=$seed: input order changed the answer")
     }
+  }
+
+  test("a generated multi-file table compacts to the same rows at 1, 4 and 13 partitions, combined or not") {
+    val root = java.nio.file.Files.createTempDirectory("tiescan").toFile
+    TestUtil.writeGenerations(spark, root, gens = 4, keys = 300)
+    def compacted(parts: Int, combine: Boolean): Seq[String] =
+      render(GraftSSTable.compact(GraftSSTable.readAtoms(spark, root.toString,
+        Map("combine" -> combine.toString, "blocksize" -> "2048")), numPartitions = parts).collect().toSeq)
+    val base = compacted(1, combine = true)
+    assert(base.size == 300)
+    for (parts <- Seq(1, 4, 13); combine <- Seq(true, false)) {
+      val same = compacted(parts, combine) == base
+      assert(same, s"numPartitions=$parts combine=$combine changed the answer")
+    }
+    // the shuffle delivers tied atoms in map-task order, so listing the
+    // generations backwards reverses every tie
+    val backwards = (4 to 1 by -1).map(g => GraftSSTable.readAtoms(spark, new java.io.File(root, s"gen$g").toString))
+      .reduce(_ union _)
+    val same = render(GraftSSTable.compact(backwards, numPartitions = 4).collect().toSeq) == base
+    assert(same, "the generations' order changed the answer")
+    TestUtil.deleteRecursively(root)
   }
 }

@@ -5,9 +5,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sstable._
 
 /** S6 split combining (reference `AegisthusCombinedInputFormat`):
-  * many small sstables must bin-pack into few scan tasks (100 MB /
-  * <= 200 members by default) without changing results, and a corrupt
-  * member of a combined partition must lose only its own split. */
+  * many small sstables must pack into few scan tasks (contiguous,
+  * byte-balanced bins: at least the core count, at most 100 MB and 200
+  * members each by default) without changing results, and a corrupt
+  * member of a combined partition must lose only its own split. The
+  * suite's session has four cores, so the core floor is 4. */
 class SplitCombineSpec extends AnyFunSuite with SparkSuite {
 
   private def writeFixture(dir: java.io.File, n: Int): Unit = {
@@ -26,10 +28,11 @@ class SplitCombineSpec extends AnyFunSuite with SparkSuite {
     writeFixture(tmp, 20)
 
     val packed = GraftSSTable.readAtoms(spark, tmp.toString)
-    assert(packed.rdd.getNumPartitions == 1, "20 tiny files must become one task")
+    assert(packed.rdd.getNumPartitions == 4, "20 tiny files must fill the 4 cores, no more")
 
-    val capped = GraftSSTable.readAtoms(spark, tmp.toString, Map("combinemembers" -> "5"))
-    assert(capped.rdd.getNumPartitions == 4, "member cap must split the bin")
+    // ⌈20 / 3⌉ = 7 bins: above the core floor, so the cap decides
+    val capped = GraftSSTable.readAtoms(spark, tmp.toString, Map("combinemembers" -> "3"))
+    assert(capped.rdd.getNumPartitions == 7, "member cap must split the bins")
 
     val unpacked = GraftSSTable.readAtoms(spark, tmp.toString, Map("combine" -> "false"))
     assert(unpacked.rdd.getNumPartitions == 20)
@@ -56,11 +59,58 @@ class SplitCombineSpec extends AnyFunSuite with SparkSuite {
     victim.close()
 
     val atoms = GraftSSTable.readAtoms(spark, tmp.toString, Map("skipCorrupt" -> "true"))
-    assert(atoms.rdd.getNumPartitions == 1, "all 10 files in one combined task")
+    val victimBin = new SSTableScan(Map("path" -> tmp.toString), SSTableSource.Schema)
+      .planInputPartitions()
+      .collect { case c: SSTableCombinedPartition => c.members.map(_.path) }
+      .filter(_.exists(_.endsWith("ks-cf-jb-5-Data.db")))
+    assert(victimBin.length == 1 && victimBin.head.length > 1,
+      s"the corrupt file must share its combined task, got ${victimBin.map(_.toSeq).toSeq}")
     val keys = atoms.select("key").collect().map(r => new String(r.getAs[Array[Byte]](0))).toSet
     assert(keys == (1 to 10).filter(_ != 5).map(i => f"key$i%03d").toSet,
       "only the corrupt member's rows may be lost")
     GraftSSTable.assertCorruptFilesBelow(1)
+  }
+
+  private def part(path: String, size: Long) = SSTablePartition(path, 0, size, None, "jb")
+  private def bins(parts: Seq[SSTablePartition], opts: Map[String, String] = Map.empty,
+      parallelism: Int = 4): Seq[Seq[String]] =
+    SSTableSource.combineSplits(parts, opts, parallelism).toSeq.map {
+      case c: SSTableCombinedPartition => c.members.map(_.path).toSeq
+    }
+
+  test("a column family under one combinesize still fills every core") {
+    val four = (1 to 4).map(i => part(s"f$i", 950000))
+    assert(bins(four, Map("combinesize" -> "5000000")) == Seq(Seq("f1"), Seq("f2"), Seq("f3"), Seq("f4")))
+    assert(bins(four, parallelism = 2) == Seq(Seq("f1", "f2"), Seq("f3", "f4")))
+    // spark.sql.files.minPartitionNum overrides the core count, as for
+    // Spark's own file sources
+    assert(SSTableSource.scanParallelism(spark) == 4)
+    spark.conf.set("spark.sql.files.minPartitionNum", "2")
+    try assert(SSTableSource.scanParallelism(spark) == 2)
+    finally spark.conf.unset("spark.sql.files.minPartitionNum")
+  }
+
+  test("byte-sized bins are contiguous runs in listing order") {
+    // eight equal files, combinesize about 2.2 files: the contiguous
+    // pairs a greedy 100 MB fill makes
+    val eight = (1 to 8).map(i => part(s"f$i", 2250000))
+    assert(bins(eight, Map("combinesize" -> "5000000")) ==
+      Seq(Seq("f1", "f2"), Seq("f3", "f4"), Seq("f5", "f6"), Seq("f7", "f8")))
+    // a large file's splits fill the bins in order; the small files
+    // after it join the last one
+    val mixed = Seq.fill(6)(part("big", 100)) ++ Seq(part("s1", 10), part("s2", 10))
+    assert(bins(mixed, parallelism = 2) == Seq(Seq.fill(3)("big"), Seq.fill(3)("big") ++ Seq("s1", "s2")))
+  }
+
+  test("no combined task exceeds combinemembers") {
+    val rnd = new scala.util.Random(11)
+    val parts = (1 to 500).map(i => part(s"f$i", 1L + rnd.nextInt(1000)))
+    Seq(1, 3, 7, 50, 200).foreach { cap =>
+      val got = bins(parts, Map("combinemembers" -> cap.toString, "combinesize" -> "100000"))
+      assert(got.forall(_.length <= cap), s"cap $cap: ${got.map(_.length).max}")
+      assert(got.flatten == parts.map(_.path), "bins must keep every split, in listing order")
+      assert(got.length >= math.max(4, math.ceil(500.0 / cap).toInt))
+    }
   }
 
   test("partitions report block hosts for preferredLocations (single + combined)") {

@@ -134,6 +134,16 @@ class StreamingCompactionSpec extends AnyFunSuite with SparkSuite {
       "late low-ts cell must stay shadowed by the pre-restart tombstone")
   }
 
+  test("equal-ts tombstone replaces a live cell in either arrival order") {
+    def cell(kind: String) = AtomRec("k".getBytes, "src", Long.MinValue, kind, "a".getBytes,
+      "v".getBytes, Some(7L), None, None, None, null)
+    val empty = StreamingCompaction.RowState(Long.MinValue, Map.empty, Nil)
+    val live = cell(SSTableFormat.KindColumn)
+    val dead = cell(SSTableFormat.KindDeleted)
+    val both = Seq(Seq(live, dead), Seq(dead, live)).map(o => StreamingCompaction.mergeAtoms(empty, o.iterator))
+    assert(both.forall(_.cells(CassType.hex("a".getBytes)).kind == SSTableFormat.KindDeleted), both.toString)
+  }
+
   test("merge is associative: split input arbitrarily, same state") {
     import spark.implicits._
     val atoms = GraftSSTable.readAtoms(spark, s"$testRoot/1.2.18/randomtable/input")
